@@ -19,7 +19,7 @@ final class QueryTaskMetricsListener extends SparkListener {
     var shuffleRead = 0L; var shuffleWrite = 0L
     var inputBytes = 0L; var recordsRead = 0L
     var peakMem = 0L; var tasks = 0L
-    var cpuTimeNs = 0L
+    var cpuTimeNs = 0L; var jobs = 0L
   }
   private val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
   private val byGroup = new java.util.concurrent.ConcurrentHashMap[String, Agg]()
@@ -27,16 +27,23 @@ final class QueryTaskMetricsListener extends SparkListener {
   override def onJobStart(js: SparkListenerJobStart): Unit = {
     val g = Option(js.properties)
       .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-    if (g.nonEmpty) js.stageIds.foreach(id => stageGroup.put(id, g))
+    if (g.nonEmpty) {
+      js.stageIds.foreach(id => stageGroup.put(id, g))
+      val a = agg(g)
+      a.synchronized { a.jobs += 1 }
+    }
+  }
+  // plain get-then-putIfAbsent, never a nested compute (NOTES: nested
+  // ConcurrentHashMap.compute threw "Recursive update")
+  private def agg(g: String): Agg = {
+    val a = byGroup.get(g)
+    if (a != null) a else { byGroup.putIfAbsent(g, new Agg); byGroup.get(g) }
   }
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
     val g = stageGroup.getOrDefault(te.stageId, "")
     val tm = te.taskMetrics
     if (g.nonEmpty && tm != null) {
-      // plain get-then-putIfAbsent, never a nested compute (NOTES: nested
-      // ConcurrentHashMap.compute threw "Recursive update")
-      var a = byGroup.get(g)
-      if (a == null) { byGroup.putIfAbsent(g, new Agg); a = byGroup.get(g) }
+      val a = agg(g)
       a.synchronized {
         a.shuffleRead += tm.shuffleReadMetrics.totalBytesRead
         a.shuffleWrite += tm.shuffleWriteMetrics.bytesWritten
@@ -250,7 +257,7 @@ object Bench {
         var wall: Double = -1.0, var lastWall: Double = -1.0, var rows: Long = -1L,
         var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L,
         var inputBytes: Long = 0L, var recordsRead: Long = 0L,
-        var peakMem: Long = 0L, var cpuMin: Double = -1.0)
+        var peakMem: Long = 0L, var cpuMin: Double = -1.0, var jobs: Long = 0L)
     val passes = 3
     val best = collection.mutable.LinkedHashMap[String, QRes]()
     for (pass <- 1 to passes; (name, fn) <- queries) {
@@ -310,7 +317,7 @@ object Bench {
               res.rows = rowsV
               res.shuffleRead = a.shuffleRead; res.shuffleWrite = a.shuffleWrite
               res.inputBytes = a.inputBytes; res.recordsRead = a.recordsRead
-              res.peakMem = a.peakMem
+              res.peakMem = a.peakMem; res.jobs = a.jobs
               res.lastWall = t
             }
           }
@@ -433,7 +440,7 @@ object Bench {
         f""""cpu_s":${v.cpuMin}%.3f,""" +
         s""""shuffle_read_bytes":${v.shuffleRead},"shuffle_write_bytes":${v.shuffleWrite},""" +
         s""""input_bytes":${v.inputBytes},"records_read":${v.recordsRead},""" +
-        s""""peak_execution_memory":${v.peakMem}}"""
+        s""""peak_execution_memory":${v.peakMem},"jobs":${v.jobs}}"""
     }.mkString("{", ",", "}")
     val countersLine =
       s"""{"metric":"query_counters","agg":"min_shuffle_pass","queries":$counters,$provenance}"""

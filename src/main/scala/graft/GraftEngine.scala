@@ -9,6 +9,7 @@ import graft.render.ErdRenderer
 import graft.state.IncrementalState
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.graftshim.Barrier
 
 /** End-to-end engine facade — the reference's main pipeline (main.py:78-306,
   * SURVEY §3.1-3.2) as one lazily-composed Spark job chain:
@@ -584,16 +585,10 @@ object Main {
               s"(8-band LSH is lossless only there), got: $tauArg"))
         println(s"perceptual near-dup image pairs (128-bit dHash hamming <= $tau):")
         graft.ext.Multimodal.dhashNearDup(
-            graft.ext.Multimodal.bmpDHash128(
+            graft.ext.Multimodal.bmpDHash128(Barrier(
               graft.ext.Multimodal.encodeBmp(
                 graft.ext.Multimodal.documentsAsAssets(
-                  Tables.documents(spark, dir)), width = 16)
-                // materialization boundary between the synthesized-bytes
-                // producer and the decode, per Multimodal's composition
-                // note — without it scan-collapse inlines the whole encode
-                // expression into every header-byte access (the
-                // --scene-cuts path's discipline)
-                .repartition(col("asset_id")).localCheckpoint()),
+                  Tables.documents(spark, dir)), width = 16))),
             maxHamming = tau)
           .orderBy(col("hamming"), col("asset_a"), col("asset_b"))
           .show(30, truncate = false)
@@ -606,11 +601,10 @@ object Main {
           .getOrElse(sys.error(
             s"--scene-cuts THRESHOLD_MILLI must be a non-negative integer, got: $thr"))
         println(s"video scene cuts (|mean-luma delta| >= $t milli):")
-        graft.ext.Multimodal.y4mSceneCuts(
+        graft.ext.Multimodal.y4mSceneCuts(Barrier(
             graft.ext.Multimodal.encodeY4m(
               graft.ext.Multimodal.documentsAsAssets(
-                Tables.documents(spark, dir)))
-              .repartition(col("asset_id")).localCheckpoint(),
+                Tables.documents(spark, dir)))),
             thresholdMilli = t)
           .orderBy(col("delta_milli").desc, col("asset_id"), col("frame_idx"))
           .show(30, truncate = false)
@@ -628,11 +622,10 @@ object Main {
       // a storage scan)
       if (args.contains("--jpeg-stats")) {
         println("lossless-JPEG decode stats (DHT parse + Huffman bitstream + prediction):")
-        graft.ext.Multimodal.jpegStats(
+        graft.ext.Multimodal.jpegStats(Barrier(
             graft.ext.Multimodal.encodeJpegLossless(
               graft.ext.Multimodal.documentsAsAssets(
-                Tables.documents(spark, dir)), width = 40)
-              .repartition(col("asset_id")).localCheckpoint())
+                Tables.documents(spark, dir)), width = 40)))
           .orderBy(col("asset_id"))
           .show(30, truncate = false)
       }
@@ -642,11 +635,10 @@ object Main {
       // off a storage scan)
       if (args.contains("--jpeg-dct-stats")) {
         println("baseline-DCT JPEG decode stats (DQT/DHT parse + entropy decode + IDCT):")
-        graft.ext.Multimodal.jpegDctStats(
+        graft.ext.Multimodal.jpegDctStats(Barrier(
             graft.ext.Multimodal.encodeJpegDct(
               graft.ext.Multimodal.documentsAsAssets(
-                Tables.documents(spark, dir)), width = 8)
-              .repartition(col("asset_id")).localCheckpoint())
+                Tables.documents(spark, dir)), width = 8)))
           .orderBy(col("asset_id"))
           .show(30, truncate = false)
       }
@@ -655,11 +647,10 @@ object Main {
       // storage scan)
       if (args.contains("--png-stats")) {
         println("PNG decode stats (CRC-verified chunk walk + inflate + unfilter):")
-        graft.ext.Multimodal.pngStats(
+        graft.ext.Multimodal.pngStats(Barrier(
             graft.ext.Multimodal.encodePng(
               graft.ext.Multimodal.documentsAsAssets(
-                Tables.documents(spark, dir)), width = 6)
-              .repartition(col("asset_id")).localCheckpoint())
+                Tables.documents(spark, dir)), width = 6)))
           .orderBy(col("asset_id"))
           .show(30, truncate = false)
       }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Barrier
 import org.apache.spark.sql.types.DecimalType
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -1945,24 +1946,13 @@ object SparkEntry {
     // channel sums + fixed-point mean luma. Encode AND decode replay in
     // the oracle. Limited to 120 assets to bound the per-pixel expansion.
     "q241_bmp_stats" -> { (s, dir) =>
-      // the boundary between codec halves is load-bearing twice over: the
-      // repartition spreads the per-pixel decode walk across cores (decode
-      // cost is w·h rows per asset, far heavier than the encode
-      // projection), and the localCheckpoint severs the lineage — without
-      // it predicate pushdown drags the decode's header-validity filter
-      // down onto the encode projection, where scan-collapse inlines the
-      // 15-field encode expression into every header-byte access (21×),
-      // recomputing the encode per field and blowing the generated code
-      // past Janino's 64 KB method limit into interpreted fallback. A real
-      // pipeline has this boundary naturally: encoded assets come back off
-      // storage.
-      graft.ext.Multimodal.bmpStats(
+      // the Barrier between codec halves keeps the encode out of the
+      // decode's header-byte accesses (see Barrier)
+      graft.ext.Multimodal.bmpStats(Barrier(
         graft.ext.Multimodal.encodeBmp(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 120)),
-          width = 6)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 6)))
     },
     // PCM16 zero-crossing + peak windows (E202): the other two classic
     // VAD features next to q238's energy — exact sign-change counts per
@@ -1979,13 +1969,11 @@ object SparkEntry {
     // blown-out triage before any vision model sees pixels. Same decode +
     // boundary discipline as q241.
     "q244_bmp_luma_hist" -> { (s, dir) =>
-      graft.ext.Multimodal.bmpLumaHistogram(
+      graft.ext.Multimodal.bmpLumaHistogram(Barrier(
         graft.ext.Multimodal.encodeBmp(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 120)),
-          width = 6)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 6)))
     },
     // int8 scalar-quantization error audit (E204): exact per-vector
     // reconstruction cost of the 4× embedding compression, fixed-pointed
@@ -2067,12 +2055,10 @@ object SparkEntry {
     // decode — magic + fmt fields, data-chunk location, exact frame count
     // and duration. Same encode→boundary→decode discipline as q241.
     "q253_wav_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.wavStats(
+      graft.ext.Multimodal.wavStats(Barrier(
         graft.ext.Multimodal.encodeWav(
           graft.ext.Multimodal.documentsAsAssets(
-            Tables.documents(s, dir).filter(col("doc_id") < 150)))
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+            Tables.documents(s, dir).filter(col("doc_id") < 150)))))
     },
     // G.711 mu-law (E283): WAVE format 7, one companded byte per sample,
     // expanded to linear PCM by the public ITU-T segment formula (the
@@ -2084,13 +2070,11 @@ object SparkEntry {
     // false-invalidated it. The header changes, the samples never do:
     // same oracle as q349 VERBATIM.
     "q356_wav_extensible" -> { (s, dir) =>
-      graft.ext.Multimodal.wavChannelStats(
+      graft.ext.Multimodal.wavChannelStats(Barrier(
         graft.ext.Multimodal.encodeWav(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 150)),
-          channels = 2, extensible = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          channels = 2, extensible = true)))
         .select(col("asset_id"), col("n_frames"), col("sum_l"),
           col("sum_r"), col("sum_abs_l"), col("sum_abs_r"),
           col("sum_if"))
@@ -2101,13 +2085,11 @@ object SparkEntry {
     // payload bytes mean different samples than in WAV, which is what
     // the oracle replays.
     "q350_aiff_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.aiffStats(
+      graft.ext.Multimodal.aiffStats(Barrier(
         graft.ext.Multimodal.encodeAiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 150)),
-          channels = 1)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          channels = 1)))
         .select(col("asset_id"), col("is_valid"), col("n_channels"),
           col("sample_rate"), col("n_frames"), col("sum_s"),
           col("sum_abs"), col("sum_if"), col("sum_l"), col("sum_r"))
@@ -2115,13 +2097,11 @@ object SparkEntry {
     // Stereo AIFF (E294): interleaved big-endian frames, channel sums
     // split, frame weighting pinning the interleave order.
     "q351_aiff_stereo" -> { (s, dir) =>
-      graft.ext.Multimodal.aiffStats(
+      graft.ext.Multimodal.aiffStats(Barrier(
         graft.ext.Multimodal.encodeAiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 150)),
-          channels = 2)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          channels = 2)))
         .select(col("asset_id"), col("is_valid"), col("n_channels"),
           col("sample_rate"), col("n_frames"), col("sum_s"),
           col("sum_abs"), col("sum_if"), col("sum_l"), col("sum_r"))
@@ -2130,25 +2110,21 @@ object SparkEntry {
     // sums off whole block-aligned frames; sum_if pins the interleave
     // order (an L/R swap or frame misalignment is hash-visible).
     "q349_wav_stereo" -> { (s, dir) =>
-      graft.ext.Multimodal.wavChannelStats(
+      graft.ext.Multimodal.wavChannelStats(Barrier(
         graft.ext.Multimodal.encodeWav(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 150)),
-          channels = 2)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          channels = 2)))
         .select(col("asset_id"), col("n_frames"), col("sum_l"),
           col("sum_r"), col("sum_abs_l"), col("sum_abs_r"),
           col("sum_if"))
     },
     "q334_wav_ulaw" -> { (s, dir) =>
-      graft.ext.Multimodal.g711Stats(
+      graft.ext.Multimodal.g711Stats(Barrier(
         graft.ext.Multimodal.encodeWav(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 150)),
-          fmt = 7)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          fmt = 7)))
         .select(col("asset_id"), col("law"), col("n_samples"),
           col("sum_s"), col("sum_abs"))
     },
@@ -2156,25 +2132,21 @@ object SparkEntry {
     // bit SET means positive; the format FIELD drives which expansion
     // runs (one surface, both laws, like a real reader).
     "q335_wav_alaw" -> { (s, dir) =>
-      graft.ext.Multimodal.g711Stats(
+      graft.ext.Multimodal.g711Stats(Barrier(
         graft.ext.Multimodal.encodeWav(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 150)),
-          fmt = 6)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          fmt = 6)))
         .select(col("asset_id"), col("law"), col("n_samples"),
           col("sum_s"), col("sum_abs"))
     },
     // Windowed PCM energy THROUGH the container (E213): q238's per-sample
     // decode walk driven by the parsed data-chunk offset.
     "q254_wav_energy" -> { (s, dir) =>
-      graft.ext.Multimodal.wavWindowEnergy(
+      graft.ext.Multimodal.wavWindowEnergy(Barrier(
         graft.ext.Multimodal.encodeWav(
           graft.ext.Multimodal.documentsAsAssets(
-            Tables.documents(s, dir).filter(col("doc_id") < 100)))
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+            Tables.documents(s, dir).filter(col("doc_id") < 100)))),
         windowSamples = 16)
     },
     // Binary PPM (P6) decode stats (E216): the third arithmetic image
@@ -2183,13 +2155,11 @@ object SparkEntry {
     // RGB instead of padded BGR: the walk is format-generic. Same
     // encode→boundary→decode discipline as q241.
     "q257_ppm_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.ppmStats(
+      graft.ext.Multimodal.ppmStats(Barrier(
         graft.ext.Multimodal.encodePpm(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 120)),
-          width = 6)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 6)))
     },
     // Exact longest shared verbatim run per near-dup pair (E217):
     // candidate pairs anchored on shared winnowed fingerprints (q250's
@@ -2215,13 +2185,11 @@ object SparkEntry {
     // non-self-cancelling codec bug breaks the sums, and byte-exact op
     // streams are pinned separately in QoiCodecSpec).
     "q260_qoi_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.qoiStats(
+      graft.ext.Multimodal.qoiStats(Barrier(
         graft.ext.Multimodal.encodeQoi(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 120)),
-          width = 6)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 6)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"), col("sum_g"),
           col("sum_b"), col("mean_luma_milli"))
@@ -2243,13 +2211,11 @@ object SparkEntry {
     // (dHash needs >= 9 columns). Same encode→boundary→decode discipline
     // as q241.
     "q262_image_dhash" -> { (s, dir) =>
-      graft.ext.Multimodal.bmpDHash(
+      graft.ext.Multimodal.bmpDHash(Barrier(
         graft.ext.Multimodal.encodeBmp(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 150)),
-          width = 16)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 16)))
     },
     // Perceptual near-dup image pairs (E221, 128-bit fingerprint E230):
     // corpus ∪ perturbed variants (nine bytes appended — usually invisible
@@ -2264,13 +2230,11 @@ object SparkEntry {
       val variants = docs.select((col("doc_id") + 1000000L).as("doc_id"),
         concat(col("text"), lit(" " * 9)).as("text"), col("source"))
       graft.ext.Multimodal.dhashNearDup(
-        graft.ext.Multimodal.bmpDHash128(
+        graft.ext.Multimodal.bmpDHash128(Barrier(
           graft.ext.Multimodal.encodeBmp(
             graft.ext.Multimodal.documentsAsAssets(
               docs.unionByName(variants)),
-            width = 16)
-            .repartition(col("asset_id"))
-            .localCheckpoint()),
+            width = 16))),
         maxHamming = 6)
     },
     // Audio energy-contour fingerprint (E222): the 1-D dHash analog over
@@ -2300,9 +2264,9 @@ object SparkEntry {
         graft.ext.Multimodal.audioFingerprint128(
           graft.ext.Multimodal.documentsAsAssets(docs.unionByName(variants))
             // spread the per-asset synthesis+window walk across cores: the
-            // single-split local scan otherwise runs it serially (q270/q274's
-            // established repartition(asset_id) boundary; at scale the scan
-            // arrives multi-split and this is a cheap same-key reshuffle)
+            // single-split local scan otherwise runs it serially (at scale
+            // the scan arrives multi-split and this is a cheap same-key
+            // reshuffle)
             .repartition(col("asset_id")),
           windowSamples = 1),
         Seq("f0", "f1", "f2", "f3"), maxHamming = 6)
@@ -2312,26 +2276,22 @@ object SparkEntry {
     // three-level frame/row/column walk, per-frame marker verification.
     // Same encode→boundary→decode discipline as q241.
     "q266_y4m_frames" -> { (s, dir) =>
-      graft.ext.Multimodal.y4mFrameLuma(
+      graft.ext.Multimodal.y4mFrameLuma(Barrier(
         graft.ext.Multimodal.encodeY4m(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 150)),
-          width = 6, height = 4)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 6, height = 4)))
     },
     // Scene-cut detection through the container (E225): adjacent-frame
     // mean-luma deltas, cuts at >= 5000 milli — the hard-cut detector
     // run before sampling training frames; lag window per asset over the
     // per-frame aggregate, never pixels.
     "q267_scene_cuts" -> { (s, dir) =>
-      graft.ext.Multimodal.y4mSceneCuts(
+      graft.ext.Multimodal.y4mSceneCuts(Barrier(
         graft.ext.Multimodal.encodeY4m(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 150)),
-          width = 6, height = 4)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          width = 6, height = 4)),
         thresholdMilli = 5000L)
     },
     // PNG decode stats (E226): the first ENTROPY-CODED format decoded
@@ -2343,13 +2303,11 @@ object SparkEntry {
     // cancelling filter/inflate bug breaks the sums (the filter math is
     // additionally pinned per type on hand-built streams in PngCodecSpec).
     "q268_png_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.pngStats(
+      graft.ext.Multimodal.pngStats(Barrier(
         graft.ext.Multimodal.encodePng(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 6)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 6)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"), col("sum_g"),
           col("sum_b"), col("mean_luma_milli"))
@@ -2360,13 +2318,11 @@ object SparkEntry {
     // reproduces the three independent channel maps (i, 255-i, 7i mod
     // 256) the oracle replays in SQL.
     "q331_png_palette" -> { (s, dir) =>
-      graft.ext.Multimodal.pngStats(
+      graft.ext.Multimodal.pngStats(Barrier(
         graft.ext.Multimodal.encodePng(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 40, colorType = 3)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, colorType = 3)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"), col("sum_g"),
           col("sum_b"), col("mean_luma_milli"), col("sum_rowv"))
@@ -2374,13 +2330,11 @@ object SparkEntry {
     // GRAYSCALE PNG (E281): color type 0 — one byte per pixel, r=g=b;
     // row/col-weighted sums pin pixel placement.
     "q332_png_gray" -> { (s, dir) =>
-      graft.ext.Multimodal.pngStats(
+      graft.ext.Multimodal.pngStats(Barrier(
         graft.ext.Multimodal.encodePng(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 40, colorType = 0)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, colorType = 0)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"),
           col("mean_luma_milli"), col("sum_rowv"), col("sum_colv"))
@@ -2391,13 +2345,11 @@ object SparkEntry {
     // placement proof — a decoder that mis-places any pass matches the
     // plain sums but not these.
     "q333_png_adam7" -> { (s, dir) =>
-      graft.ext.Multimodal.pngStats(
+      graft.ext.Multimodal.pngStats(Barrier(
         graft.ext.Multimodal.encodePng(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 6, interlaced = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 6, interlaced = true)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"), col("sum_g"),
           col("sum_b"), col("mean_luma_milli"), col("sum_rowv"),
@@ -2409,13 +2361,11 @@ object SparkEntry {
     // oracle replays the palette rule off raw payload bytes; the
     // row-weighted sum in IMAGE coordinates proves the vertical flip.
     "q341_bmp_rle8" -> { (s, dir) =>
-      graft.ext.Multimodal.bmpRle8Stats(
+      graft.ext.Multimodal.bmpRle8Stats(Barrier(
         graft.ext.Multimodal.encodeBmpRle8(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 40)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"), col("sum_g"),
           col("sum_b"), col("mean_luma_milli"), col("sum_rowv"),
@@ -2427,13 +2377,11 @@ object SparkEntry {
     // weighting pins member order AND the DIB flip; the AND mask is
     // counted coverage that never reaches the channel sums.
     "q354_ico_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.icoStats(
+      graft.ext.Multimodal.icoStats(Barrier(
         graft.ext.Multimodal.encodeIco(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 8)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 8)))
         .select(col("asset_id"), col("is_valid"), col("n_images"),
           col("n_png"), col("n_dib"), col("n_pixels"), col("sum_r"),
           col("sum_g"), col("sum_b"), col("sum_rowv"),
@@ -2444,13 +2392,11 @@ object SparkEntry {
     // absolute runs pack nibbles high-first with required-zero pads.
     // Pixel index = payload byte mod 16; same flip-proof weighting.
     "q346_bmp_rle4" -> { (s, dir) =>
-      graft.ext.Multimodal.bmpRle4Stats(
+      graft.ext.Multimodal.bmpRle4Stats(Barrier(
         graft.ext.Multimodal.encodeBmpRle4(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 40)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"), col("sum_g"),
           col("sum_b"), col("mean_luma_milli"), col("sum_rowv"),
@@ -2463,13 +2409,11 @@ object SparkEntry {
     // replays the palette maps off raw bytes; sum_colv pins the
     // BIT-ORDER (an LSB-first decoder swaps column weights).
     "q344_png_pal4" -> { (s, dir) =>
-      graft.ext.Multimodal.pngStats(
+      graft.ext.Multimodal.pngStats(Barrier(
         graft.ext.Multimodal.encodePng(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 40, colorType = 3, depth = 4)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, colorType = 3, depth = 4)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"), col("sum_g"),
           col("sum_b"), col("mean_luma_milli"), col("sum_rowv"),
@@ -2478,13 +2422,11 @@ object SparkEntry {
     // BILEVEL (1-BIT) PNG (E290): the scanned-document wire — eight
     // pixels per byte. Pixel i = payload byte i mod 2.
     "q345_png_gray1" -> { (s, dir) =>
-      graft.ext.Multimodal.pngStats(
+      graft.ext.Multimodal.pngStats(Barrier(
         graft.ext.Multimodal.encodePng(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 40, colorType = 0, depth = 1)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, colorType = 0, depth = 1)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"),
           col("mean_luma_milli"), col("sum_rowv"), col("sum_colv"))
@@ -2493,13 +2435,11 @@ object SparkEntry {
     // big-endian sample pairs, filters on the 2-byte stride per spec.
     // The oracle reads each sample as 256*hi + lo off the raw payload.
     "q338_png_gray16" -> { (s, dir) =>
-      graft.ext.Multimodal.pngStats(
+      graft.ext.Multimodal.pngStats(Barrier(
         graft.ext.Multimodal.encodePng(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 20, colorType = 0, depth = 16)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 20, colorType = 0, depth = 16)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"),
           col("mean_luma_milli"), col("sum_rowv"), col("sum_colv"))
@@ -2508,13 +2448,11 @@ object SparkEntry {
     // stats, alpha is coverage (the RGBA stance); filters on the
     // 2-byte stride.
     "q339_png_graya" -> { (s, dir) =>
-      graft.ext.Multimodal.pngStats(
+      graft.ext.Multimodal.pngStats(Barrier(
         graft.ext.Multimodal.encodePng(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 130)),
-          width = 20, colorType = 4)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 20, colorType = 4)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"),
           col("mean_luma_milli"), col("sum_rowv"), col("sum_colv"))
@@ -2535,13 +2473,11 @@ object SparkEntry {
       val variants = docs.select((col("doc_id") + 1000000L).as("doc_id"),
         concat(col("text"), lit(" " * 9)).as("text"), col("source"))
       graft.ext.Multimodal.dhashNearDup(
-        graft.ext.Multimodal.bmpDHash128(
+        graft.ext.Multimodal.bmpDHash128(Barrier(
           graft.ext.Multimodal.encodeBmp(
             graft.ext.Multimodal.documentsAsAssets(
               docs.unionByName(variants)),
-            width = 16)
-            .repartition(col("asset_id"))
-            .localCheckpoint()),
+            width = 16))),
         maxHamming = 6)
     },
     // Lossless-JPEG decode stats (E229): the second entropy-coded format
@@ -2551,13 +2487,11 @@ object SparkEntry {
     // shape applies: expected stats computed straight from the raw
     // payload (grayscale: the bytes themselves), width 40 ⇒ 40 bytes/row.
     "q271_jpegll_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.jpegStats(
+      graft.ext.Multimodal.jpegStats(Barrier(
         graft.ext.Multimodal.encodeJpegLossless(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("predictor"))
@@ -2574,13 +2508,11 @@ object SparkEntry {
     // (JpegDctCodec.basisSqlRows/quantSqlRows), the minhash-coefficient
     // discipline.
     "q272_jpegdct_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.jpegDctStats(
+      graft.ext.Multimodal.jpegDctStats(Barrier(
         graft.ext.Multimodal.encodeJpegDct(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 8)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 8)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("n_blocks"))
@@ -2593,12 +2525,10 @@ object SparkEntry {
     // MCU's six blocks), so the oracle routes the per-block replay by
     // b mod 6 alone and reports exact per-component sums.
     "q275_jpeg420_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.jpeg420Stats(
+      graft.ext.Multimodal.jpeg420Stats(Barrier(
         graft.ext.Multimodal.encodeJpeg420(
           graft.ext.Multimodal.documentsAsAssets(
-            Tables.documents(s, dir).filter(col("doc_id") < 140)))
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+            Tables.documents(s, dir).filter(col("doc_id") < 140)))))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("n_components"),
           col("sum_y"), col("sum_cb"), col("sum_cr"),
@@ -2612,13 +2542,11 @@ object SparkEntry {
     // modulo sequence, byte alignment, predictor resets on BOTH sides)
     // decodes to the exact same per-component stats.
     "q276_jpeg420_restart_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.jpeg420Stats(
+      graft.ext.Multimodal.jpeg420Stats(Barrier(
         graft.ext.Multimodal.encodeJpeg420(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          restartInterval = 2)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          restartInterval = 2)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("n_components"),
           col("sum_y"), col("sum_cb"), col("sum_cr"),
@@ -2630,12 +2558,10 @@ object SparkEntry {
     // in the decoder, same parametrized block-position oracle replay
     // (b mod 4 routes the quant table).
     "q277_jpeg422_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.jpeg420Stats(
+      graft.ext.Multimodal.jpeg420Stats(Barrier(
         graft.ext.Multimodal.encodeJpeg422(
           graft.ext.Multimodal.documentsAsAssets(
-            Tables.documents(s, dir).filter(col("doc_id") < 140)))
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+            Tables.documents(s, dir).filter(col("doc_id") < 140)))))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("n_components"),
           col("sum_y"), col("sum_cb"), col("sum_cr"),
@@ -2645,12 +2571,10 @@ object SparkEntry {
     // high-quality shape — all components 1x1, three blocks per MCU
     // (Y Cb Cr), no subsampling at all (chroma planes are full size).
     "q278_jpeg444_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.jpeg420Stats(
+      graft.ext.Multimodal.jpeg420Stats(Barrier(
         graft.ext.Multimodal.encodeJpeg444(
           graft.ext.Multimodal.documentsAsAssets(
-            Tables.documents(s, dir).filter(col("doc_id") < 140)))
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+            Tables.documents(s, dir).filter(col("doc_id") < 140)))))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("n_components"),
           col("sum_y"), col("sum_cb"), col("sum_cr"),
@@ -2662,12 +2586,10 @@ object SparkEntry {
     // Hi x Vi MCU walk (factors now accepted to T.81's real 1..4 bound
     // with sum(Hi·Vi) <= 10), same parametrized oracle replay.
     "q283_jpeg411_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.jpeg420Stats(
+      graft.ext.Multimodal.jpeg420Stats(Barrier(
         graft.ext.Multimodal.encodeJpeg411(
           graft.ext.Multimodal.documentsAsAssets(
-            Tables.documents(s, dir).filter(col("doc_id") < 140)))
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+            Tables.documents(s, dir).filter(col("doc_id") < 140)))))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("n_components"),
           col("sum_y"), col("sum_cb"), col("sum_cr"),
@@ -2680,13 +2602,11 @@ object SparkEntry {
     // the raw payload while the engine must parse them back out of the
     // stream it encoded — a round-trip proof of the APPn machinery.
     "q280_jpeg_metadata" -> { (s, dir) =>
-      graft.ext.Multimodal.jpegMetadata(
+      graft.ext.Multimodal.jpegMetadata(Barrier(
         graft.ext.Multimodal.encodeJpegDctMeta(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 8)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 8)))
         .select(col("asset_id"), col("is_valid"), col("exif_orientation"),
           col("jfif_units"), col("jfif_xdensity"), col("jfif_ydensity"),
           col("n_pixels"))
@@ -2699,13 +2619,11 @@ object SparkEntry {
     // oracle is q272's integer-pipeline replay VERBATIM — hash-equality
     // proves the progressive entropy machinery bijective end to end.
     "q279_jpegprog_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.jpegDctStats(
+      graft.ext.Multimodal.jpegDctStats(Barrier(
         graft.ext.Multimodal.encodeJpegProgressive(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 8)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 8)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("n_blocks"))
@@ -2715,12 +2633,10 @@ object SparkEntry {
     // frame walk, cost linear in pixel mass, for ScaleBench's measured
     // exponent.
     "q270_y4m_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.y4mFrameLuma(
+      graft.ext.Multimodal.y4mFrameLuma(Barrier(
         graft.ext.Multimodal.encodeY4m(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          width = 6, height = 4)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 6, height = 4)))
     },
     // Audio fingerprint near-dup over the WHOLE corpus (E223/E230's scale
     // twin, E232): identical semantics to q265 with no doc_id cap, so
@@ -2746,12 +2662,10 @@ object SparkEntry {
     // chunk-walk + inflate + unfilter pass per asset, cost linear in
     // byte mass, for ScaleBench's measured exponent.
     "q274_png_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.pngStats(
+      graft.ext.Multimodal.pngStats(Barrier(
         graft.ext.Multimodal.encodePng(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          width = 6)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 6)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_r"), col("sum_g"),
           col("sum_b"), col("mean_luma_milli"))
@@ -2760,12 +2674,10 @@ object SparkEntry {
     // with no doc cap — one native entropy-decode + IDCT pass per asset,
     // cost linear in byte mass, the q274 pattern on the newest codec.
     "q281_jpegdct_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.jpegDctStats(
+      graft.ext.Multimodal.jpegDctStats(Barrier(
         graft.ext.Multimodal.encodeJpegDct(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          width = 8)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 8)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("n_blocks"))
@@ -2779,13 +2691,11 @@ object SparkEntry {
     // cancels under decode∘encode, so container stats equal raw-payload
     // block arithmetic.
     "q282_mjpeg_avi_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.mjpegAviStats(
+      graft.ext.Multimodal.mjpegAviStats(Barrier(
         graft.ext.Multimodal.encodeMjpegAvi(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 8, frameBytes = 128)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 8, frameBytes = 128)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("width"), col("frame_height"), col("n_pixels"),
           col("sum_v"), col("mean_v_milli"), col("n_blocks"))
@@ -2795,13 +2705,11 @@ object SparkEntry {
     // reads record counts / content totals / block byte-sums straight
     // off the whole-record-truncated payload.
     "q288_warc_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.warcStats(
+      graft.ext.Multimodal.warcStats(Barrier(
         graft.ext.Multimodal.encodeWarc(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          recordBytes = 256)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          recordBytes = 256)))
         .select(col("asset_id"), col("is_valid"), col("n_records"),
           col("n_responses"), col("content_bytes"), col("sum_payload"))
     },
@@ -2810,13 +2718,11 @@ object SparkEntry {
     // member. Compression changes the wire, never the records, so q289
     // hash-matches q288's oracle VERBATIM (the q275/q276 discipline).
     "q289_warcgz_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.warcStats(
+      graft.ext.Multimodal.warcStats(Barrier(
         graft.ext.Multimodal.encodeWarc(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          recordBytes = 256, gz = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          recordBytes = 256, gz = true)),
         gz = true)
         .select(col("asset_id"), col("is_valid"), col("n_records"),
           col("n_responses"), col("content_bytes"), col("sum_payload"))
@@ -2829,13 +2735,11 @@ object SparkEntry {
     // and body sums off raw payload slices (status 200/404 alternates on
     // the slice index by the fixture rule, so n_200 is slice arithmetic).
     "q290_warc_http_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.warcHttpStats(
+      graft.ext.Multimodal.warcHttpStats(Barrier(
         graft.ext.Multimodal.encodeWarcHttp(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          bodyBytes = 256)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          bodyBytes = 256)))
         .select(col("asset_id"), col("is_valid"), col("n_records"),
           col("n_requests"), col("n_responses"), col("n_200"),
           col("body_bytes"), col("sum_body"), col("n_paired"))
@@ -2844,13 +2748,11 @@ object SparkEntry {
     // the wire, never the records — q291 hash-matches q290's oracle
     // VERBATIM (the q288/q289 discipline one layer up the stack).
     "q291_warc_httpgz_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.warcHttpStats(
+      graft.ext.Multimodal.warcHttpStats(Barrier(
         graft.ext.Multimodal.encodeWarcHttp(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          bodyBytes = 256, gz = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          bodyBytes = 256, gz = true)),
         gz = true)
         .select(col("asset_id"), col("is_valid"), col("n_records"),
           col("n_requests"), col("n_responses"), col("n_200"),
@@ -2862,13 +2764,11 @@ object SparkEntry {
     // by the decoder. Chunking changes the wire, never the documents:
     // q303 hash-matches q290's oracle VERBATIM.
     "q303_warc_chunked" -> { (s, dir) =>
-      graft.ext.Multimodal.warcHttpStats(
+      graft.ext.Multimodal.warcHttpStats(Barrier(
         graft.ext.Multimodal.encodeWarcHttp(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          bodyBytes = 256, chunked = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          bodyBytes = 256, chunked = true)))
         .select(col("asset_id"), col("is_valid"), col("n_records"),
           col("n_requests"), col("n_responses"), col("n_200"),
           col("body_bytes"), col("sum_body"), col("n_paired"))
@@ -2879,13 +2779,11 @@ object SparkEntry {
     // the HTTP head, and hands back the body; the oracle rebuilds every
     // per-record stat from the corresponding raw payload slice.
     "q292_warc_http_records" -> { (s, dir) =>
-      graft.ext.Multimodal.warcHttpRecords(
+      graft.ext.Multimodal.warcHttpRecords(Barrier(
         graft.ext.Multimodal.encodeWarcHttp(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          bodyBytes = 256)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          bodyBytes = 256)))
         .select(col("asset_id"), col("rec_idx"), col("status"),
           col("body_len"), col("body_sum"))
     },
@@ -2897,13 +2795,11 @@ object SparkEntry {
     // each row from the corresponding raw text slice with the same
     // regex chain (Java∩RE2-portable).
     "q310_warc_wet" -> { (s, dir) =>
-      graft.ext.Multimodal.warcTextExtracts(
+      graft.ext.Multimodal.warcTextExtracts(Barrier(
         graft.ext.Multimodal.encodeWarcHttp(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          bodyBytes = 256)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          bodyBytes = 256)))
         .select(col("asset_id"), col("rec_idx"), col("clean_hash"),
           col("clean_len"), col("n_tokens"))
     },
@@ -2916,13 +2812,11 @@ object SparkEntry {
     // oracle rebuilds the page (and its link list) in SQL and must
     // match the engine's actual regex extraction byte for byte.
     "q327_warc_wat" -> { (s, dir) =>
-      graft.ext.Multimodal.warcWatExtracts(
+      graft.ext.Multimodal.warcWatExtracts(Barrier(
         graft.ext.Multimodal.encodeWarcHttp(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          bodyBytes = 256, html = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          bodyBytes = 256, html = true)))
         .select(col("asset_id"), col("rec_idx"), col("status"),
           col("content_type"), col("n_headers"), col("body_len"),
           col("title"), col("n_links"), col("link_hash"))
@@ -2933,13 +2827,11 @@ object SparkEntry {
     // reads member counts and byte sums off raw payload slices; sum_iv
     // weights by member index, pinning member ORDER.
     "q315_tar_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.tarStats(
+      graft.ext.Multimodal.tarStats(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100)))
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
     },
@@ -2948,13 +2840,11 @@ object SparkEntry {
     // q316 hash-matches q315's oracle VERBATIM (compression changes the
     // wire, never the members).
     "q316_tar_gz" -> { (s, dir) =>
-      graft.ext.Multimodal.tarStats(
+      graft.ext.Multimodal.tarStats(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, gz = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          memberBytes = 100, gz = true)),
         gz = true)
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
@@ -2964,13 +2854,11 @@ object SparkEntry {
     // runs first. Member names follow the fixture's doc%05d.txt rule,
     // so the oracle rebuilds them with printf.
     "q317_tar_members" -> { (s, dir) =>
-      graft.ext.Multimodal.tarMembers(
+      graft.ext.Multimodal.tarMembers(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100)))
         .select(col("asset_id"), col("member_idx"), col("name"),
           col("size"), col("member_sum"))
     },
@@ -2978,12 +2866,10 @@ object SparkEntry {
     // q316 with no doc cap — one inflate + header walk per shard,
     // byte-linear with O(1) state beyond the current header.
     "q323_tar_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.tarStats(
+      graft.ext.Multimodal.tarStats(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          memberBytes = 100, gz = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          memberBytes = 100, gz = true)),
         gz = true)
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
@@ -2993,12 +2879,10 @@ object SparkEntry {
     // byte-linear (a quadratic bug in the history-window copy or the
     // sequence walk would surface as a super-linear exponent).
     "q355_lz4_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.tarStats(
+      graft.ext.Multimodal.tarStats(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          memberBytes = 100, lz4 = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          memberBytes = 100, lz4 = true)),
         lz4 = true)
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
@@ -3008,13 +2892,11 @@ object SparkEntry {
     // conversion a WebDataset loader performs, over the .tar.gz wire
     // (demux + inflate + extract + normalize + tokenize in ONE pass).
     "q322_tar_ingest" -> { (s, dir) =>
-      graft.ext.Multimodal.tarTextIngest(
+      graft.ext.Multimodal.tarTextIngest(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, gz = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          memberBytes = 100, gz = true)),
         gz = true)
         .select(col("asset_id"), col("member_idx"), col("name"),
           col("clean_hash"), col("clean_len"), col("n_tokens"))
@@ -3026,13 +2908,11 @@ object SparkEntry {
     // oracle VERBATIM — four wires (tar, tar.gz, zip, zip-deflate), one
     // member identity.
     "q318_zip_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.zipStats(
+      graft.ext.Multimodal.zipStats(Barrier(
         graft.ext.Multimodal.encodeZip(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100)))
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
     },
@@ -3040,13 +2920,11 @@ object SparkEntry {
     // by the directory's declared sizes and verified against its
     // CRC-32s — compression changes the wire, never the members.
     "q319_zip_deflate" -> { (s, dir) =>
-      graft.ext.Multimodal.zipStats(
+      graft.ext.Multimodal.zipStats(Barrier(
         graft.ext.Multimodal.encodeZip(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, deflate = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100, deflate = true)))
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
     },
@@ -3057,13 +2935,11 @@ object SparkEntry {
     // offsets by pure layout arithmetic (k*142 + 42) and the sums off
     // raw slices.
     "q330_zip_members" -> { (s, dir) =>
-      graft.ext.Multimodal.zipMembers(
+      graft.ext.Multimodal.zipMembers(Barrier(
         graft.ext.Multimodal.encodeZip(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100)))
         .select(col("asset_id"), col("member_idx"), col("name"),
           col("size"), col("member_sum"), col("data_offset"),
           col("comp_size"), col("method"))
@@ -3074,13 +2950,11 @@ object SparkEntry {
     // Cyrillic names AND the offsets their 26-BYTE UTF-8 encodings
     // produce (k*156 + 56) — only a real UTF-8 name walk matches both.
     "q358_zip_utf8" -> { (s, dir) =>
-      graft.ext.Multimodal.zipMembers(
+      graft.ext.Multimodal.zipMembers(Barrier(
         graft.ext.Multimodal.encodeZip(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, namePrefix = "документ-")
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100, namePrefix = "документ-")))
         .select(col("asset_id"), col("member_idx"), col("name"),
           col("size"), col("member_sum"), col("data_offset"),
           col("comp_size"), col("method"))
@@ -3089,13 +2963,11 @@ object SparkEntry {
     // composed with the text pipeline on the DEFLATE wire — the zip
     // twin of q322, same samples (q322's oracle arithmetic, zip names).
     "q337_zip_ingest" -> { (s, dir) =>
-      graft.ext.Multimodal.zipTextIngest(
+      graft.ext.Multimodal.zipTextIngest(Barrier(
         graft.ext.Multimodal.encodeZip(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, deflate = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100, deflate = true)))
         .select(col("asset_id"), col("member_idx"), col("name"),
           col("clean_hash"), col("clean_len"), col("n_tokens"))
     },
@@ -3105,13 +2977,11 @@ object SparkEntry {
     // indirection changes the wire, never the members: same oracle as
     // q315/q316/q318/q319 VERBATIM.
     "q325_zip64" -> { (s, dir) =>
-      graft.ext.Multimodal.zipStats(
+      graft.ext.Multimodal.zipStats(Barrier(
         graft.ext.Multimodal.encodeZip(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, zip64 = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100, zip64 = true)))
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
     },
@@ -3120,13 +2990,11 @@ object SparkEntry {
     // values in signature-led descriptors after each member, audited
     // against the central directory). Sixth wire, same member identity.
     "q326_zip_stream" -> { (s, dir) =>
-      graft.ext.Multimodal.zipStats(
+      graft.ext.Multimodal.zipStats(Barrier(
         graft.ext.Multimodal.encodeZip(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, deflate = true, descriptor = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100, deflate = true, descriptor = true)))
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
     },
@@ -3136,14 +3004,12 @@ object SparkEntry {
     // 4.3.9.2). The last fenced ZIP shape, removed: seventh wire over
     // the same member identity, same oracle VERBATIM.
     "q343_zip64_stream" -> { (s, dir) =>
-      graft.ext.Multimodal.zipStats(
+      graft.ext.Multimodal.zipStats(Barrier(
         graft.ext.Multimodal.encodeZip(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
           memberBytes = 100, deflate = true, zip64 = true,
-          descriptor = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          descriptor = true)))
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
     },
@@ -3154,13 +3020,11 @@ object SparkEntry {
     // the offsets must step over: only a decoder that really walks the
     // pax chain lands on k*2048 + 1536.
     "q329_tar_index" -> { (s, dir) =>
-      graft.ext.Multimodal.tarIndex(
+      graft.ext.Multimodal.tarIndex(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, pax = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100, pax = true)))
         .select(col("asset_id"), col("member_idx"), col("name"),
           col("size"), col("data_offset"))
     },
@@ -3170,13 +3034,11 @@ object SparkEntry {
     // EOF block. Compression changes the wire, never the members: same
     // oracle as q315/q316 VERBATIM.
     "q340_tar_bgzf" -> { (s, dir) =>
-      graft.ext.Multimodal.tarStats(
+      graft.ext.Multimodal.tarStats(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, bgzf = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          memberBytes = 100, bgzf = true)),
         bgzf = true)
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
@@ -3187,13 +3049,11 @@ object SparkEntry {
     // strict-false-invalid on the most common gzip shape. Same oracle
     // VERBATIM.
     "q357_tar_gzname" -> { (s, dir) =>
-      graft.ext.Multimodal.tarStats(
+      graft.ext.Multimodal.tarStats(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, gzHdr = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          memberBytes = 100, gzHdr = true)),
         gz = true)
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
@@ -3203,13 +3063,11 @@ object SparkEntry {
     // checksums and linked-block windowing, from the public spec
     // documents). Same oracle VERBATIM.
     "q353_tar_lz4" -> { (s, dir) =>
-      graft.ext.Multimodal.tarStats(
+      graft.ext.Multimodal.tarStats(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, lz4 = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          memberBytes = 100, lz4 = true)),
         lz4 = true)
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
@@ -3220,13 +3078,11 @@ object SparkEntry {
     // replay, masked CRC-32C chunks). Compression changes the wire,
     // never the members: same oracle VERBATIM.
     "q352_tar_snappy" -> { (s, dir) =>
-      graft.ext.Multimodal.tarStats(
+      graft.ext.Multimodal.tarStats(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, snap = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          memberBytes = 100, snap = true)),
         snap = true)
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
@@ -3238,13 +3094,11 @@ object SparkEntry {
     // old one-member contract was a strict-false-invalid on real
     // parallel-compressor output. Fifth tar wire, same oracle VERBATIM.
     "q342_tar_mgz" -> { (s, dir) =>
-      graft.ext.Multimodal.tarStats(
+      graft.ext.Multimodal.tarStats(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, mgz = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint(),
+          memberBytes = 100, mgz = true)),
         gz = true)
         .select(col("asset_id"), col("is_valid"), col("n_members"),
           col("content_bytes"), col("sum_payload"), col("sum_iv"))
@@ -3256,13 +3110,11 @@ object SparkEntry {
     // samples); only a decoder that really applies the override
     // reproduces the names.
     "q324_tar_pax" -> { (s, dir) =>
-      graft.ext.Multimodal.tarMembers(
+      graft.ext.Multimodal.tarMembers(Barrier(
         graft.ext.Multimodal.encodeTar(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          memberBytes = 100, pax = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          memberBytes = 100, pax = true)))
         .select(col("asset_id"), col("member_idx"), col("name"),
           col("size"), col("member_sum"))
     },
@@ -3270,12 +3122,10 @@ object SparkEntry {
     // with no doc cap — one container walk + HTTP parse + regex chain
     // per response row, byte-linear with no pair stage.
     "q313_wet_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.warcTextExtracts(
+      graft.ext.Multimodal.warcTextExtracts(Barrier(
         graft.ext.Multimodal.encodeWarcHttp(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          bodyBytes = 256)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          bodyBytes = 256)))
         .select(col("asset_id"), col("rec_idx"), col("clean_hash"),
           col("clean_len"), col("n_tokens"))
     },
@@ -3283,12 +3133,10 @@ object SparkEntry {
     // with no doc cap — one container walk + HTTP parse + two regex
     // passes per response row, byte-linear with no pair stage.
     "q328_wat_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.warcWatExtracts(
+      graft.ext.Multimodal.warcWatExtracts(Barrier(
         graft.ext.Multimodal.encodeWarcHttp(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          bodyBytes = 256, html = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          bodyBytes = 256, html = true)))
         .select(col("asset_id"), col("rec_idx"), col("status"),
           col("content_type"), col("n_headers"), col("body_len"),
           col("title"), col("n_links"), col("link_hash"))
@@ -3303,13 +3151,11 @@ object SparkEntry {
     // 32-byte slices so the fixture documents really produce opaque
     // records (slice 4 needs at least 160 payload bytes).
     "q309_warc_mixed" -> { (s, dir) =>
-      graft.ext.Multimodal.warcHttpStats(
+      graft.ext.Multimodal.warcHttpStats(Barrier(
         graft.ext.Multimodal.encodeWarcHttp(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          bodyBytes = 32, mixed = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          bodyBytes = 32, mixed = true)))
         .select(col("asset_id"), col("is_valid"), col("n_records"),
           col("n_requests"), col("n_responses"), col("n_200"),
           col("body_bytes"), col("sum_body"), col("n_paired"))
@@ -3317,12 +3163,10 @@ object SparkEntry {
     // Whole-corpus WARC demux scale twin (E246's measurement): q288 with
     // no doc cap — one native record walk per archive, byte-linear.
     "q293_warc_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.warcStats(
+      graft.ext.Multimodal.warcStats(Barrier(
         graft.ext.Multimodal.encodeWarc(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          recordBytes = 256)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          recordBytes = 256)))
         .select(col("asset_id"), col("is_valid"), col("n_records"),
           col("n_responses"), col("content_bytes"), col("sum_payload"))
     },
@@ -3333,13 +3177,11 @@ object SparkEntry {
     // straight from raw payload bytes (the q260 pixel-identity
     // discipline) while the engine must really LZW-decode.
     "q286_gif_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.gifStats(
+      graft.ext.Multimodal.gifStats(Barrier(
         graft.ext.Multimodal.encodeGif(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_idx"), col("sum_r"),
           col("sum_g"), col("sum_b"), col("mean_idx_milli"))
@@ -3347,12 +3189,10 @@ object SparkEntry {
     // Whole-corpus GIF decode scale twin (E245's measurement): q286 with
     // no doc cap — one native LZW pass per asset, byte-linear.
     "q287_gif_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.gifStats(
+      graft.ext.Multimodal.gifStats(Barrier(
         graft.ext.Multimodal.encodeGif(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          width = 40)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_idx"), col("sum_r"),
           col("sum_g"), col("sum_b"), col("mean_idx_milli"))
@@ -3362,13 +3202,11 @@ object SparkEntry {
     // walk can't represent (codes start at 5 bits; index = byte mod 16
     // keeps the oracle per-byte arithmetic).
     "q294_gif_pal4" -> { (s, dir) =>
-      graft.ext.Multimodal.gifStats(
+      graft.ext.Multimodal.gifStats(Barrier(
         graft.ext.Multimodal.encodeGif(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, palBits = 4)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, palBits = 4)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_idx"), col("sum_r"),
           col("sum_g"), col("sum_b"), col("mean_idx_milli"))
@@ -3379,13 +3217,11 @@ object SparkEntry {
     // really maps pass order back to screen rows (plain sums are
     // order-free and could not tell).
     "q295_gif_interlaced" -> { (s, dir) =>
-      graft.ext.Multimodal.gifStats(
+      graft.ext.Multimodal.gifStats(Barrier(
         graft.ext.Multimodal.encodeGif(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, interlaced = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, interlaced = true)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_idx"), col("sum_b"),
           col("mean_idx_milli"), col("sum_rowv"))
@@ -3396,13 +3232,11 @@ object SparkEntry {
     // rule, so the delay total is frame arithmetic); sum_rowv stacks
     // rows across frames, proving frame ORDER as well as content.
     "q296_gif_anim" -> { (s, dir) =>
-      graft.ext.Multimodal.gifStats(
+      graft.ext.Multimodal.gifStats(Barrier(
         graft.ext.Multimodal.encodeGif(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, frameHeight = 5)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, frameHeight = 5)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("width"), col("height"), col("n_pixels"), col("sum_idx"),
           col("sum_rowv"), col("sum_delay"))
@@ -3413,13 +3247,11 @@ object SparkEntry {
     // stats weight by SCREEN row and column, so only a decoder that
     // really applies the per-frame offsets reproduces them.
     "q312_gif_partial" -> { (s, dir) =>
-      graft.ext.Multimodal.gifStats(
+      graft.ext.Multimodal.gifStats(Barrier(
         graft.ext.Multimodal.encodeGif(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, frameHeight = 5, partialFrames = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, frameHeight = 5, partialFrames = true)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("width"), col("height"), col("n_pixels"), col("sum_idx"),
           col("sum_rowv"), col("sum_colv"), col("sum_delay"))
@@ -3431,12 +3263,10 @@ object SparkEntry {
     // the stream's own lossless-identity proof — while the oracle reads
     // the sample sums straight off the payload's LE 16-bit pairs.
     "q299_flac_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.flacStats(
+      graft.ext.Multimodal.flacStats(Barrier(
         graft.ext.Multimodal.encodeFlac(
           graft.ext.Multimodal.documentsAsAssets(
-            Tables.documents(s, dir).filter(col("doc_id") < 140)))
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+            Tables.documents(s, dir).filter(col("doc_id") < 140)))))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("n_samples"), col("sum_s"), col("sum_abs"), col("sum_is"))
     },
@@ -3447,13 +3277,11 @@ object SparkEntry {
     // accumulator. Lossless, so q302 hash-matches q299's oracle
     // VERBATIM — the subframe family changes the wire, never the PCM.
     "q302_flac_lpc" -> { (s, dir) =>
-      graft.ext.Multimodal.flacStats(
+      graft.ext.Multimodal.flacStats(Barrier(
         graft.ext.Multimodal.encodeFlac(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          lpcOrder = 8)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          lpcOrder = 8)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("n_samples"), col("sum_s"), col("sum_abs"), col("sum_is"))
     },
@@ -3465,13 +3293,11 @@ object SparkEntry {
     // reads the interleaved sample sums off raw payload bytes — the
     // assignment changes the wire, never the PCM.
     "q305_flac_stereo" -> { (s, dir) =>
-      graft.ext.Multimodal.flacStats(
+      graft.ext.Multimodal.flacStats(Barrier(
         graft.ext.Multimodal.encodeFlac(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          lpcOrder = 8, stereo = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          lpcOrder = 8, stereo = true)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("n_samples"), col("sum_s"), col("sum_abs"), col("sum_is"))
     },
@@ -3481,13 +3307,11 @@ object SparkEntry {
     // and the MD5 identity runs over the 3-byte stream. LPC competes as
     // in q302; the oracle reads the signed 24-bit sums off raw bytes.
     "q311_flac_24bit" -> { (s, dir) =>
-      graft.ext.Multimodal.flacStats(
+      graft.ext.Multimodal.flacStats(Barrier(
         graft.ext.Multimodal.encodeFlac(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          lpcOrder = 8, bps = 24)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          lpcOrder = 8, bps = 24)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("n_samples"), col("sum_s"), col("sum_abs"), col("sum_is"))
     },
@@ -3498,13 +3322,11 @@ object SparkEntry {
     // the pixel, so only a decoder that really composites (not just
     // sums frames) reproduces the final-screen stats.
     "q321_gif_composite" -> { (s, dir) =>
-      graft.ext.Multimodal.gifComposite(
+      graft.ext.Multimodal.gifComposite(Barrier(
         graft.ext.Multimodal.encodeGif(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, frameHeight = 5, partialFrames = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, frameHeight = 5, partialFrames = true)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("n_painted"), col("sum_fidx"), col("sum_frowv"),
           col("sum_fr"), col("sum_fg"), col("sum_fb"))
@@ -3516,13 +3338,11 @@ object SparkEntry {
     // is unchanged, so every stat except n_frames matches q299's
     // arithmetic; n_frames follows the alternation rule on ns.
     "q314_flac_varblock" -> { (s, dir) =>
-      graft.ext.Multimodal.flacStats(
+      graft.ext.Multimodal.flacStats(Barrier(
         graft.ext.Multimodal.encodeFlac(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          lpcOrder = 8, varBlock = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          lpcOrder = 8, varBlock = true)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("n_samples"), col("sum_s"), col("sum_abs"), col("sum_is"))
     },
@@ -3532,13 +3352,11 @@ object SparkEntry {
     // Lossless, so every stat reads off raw payload bytes; sum_rowv pins
     // strip ORDER, not just content.
     "q297_tiff_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.tiffStats(
+      graft.ext.Multimodal.tiffStats(Barrier(
         graft.ext.Multimodal.encodeTiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("sum_rowv"), col("n_strips"))
@@ -3548,13 +3366,11 @@ object SparkEntry {
     // RGBRGB rows (PlanarConfiguration 2 rejects visibly). Payload
     // bytes are the triplets; channel sums split by i mod 3.
     "q347_tiff_rgb" -> { (s, dir) =>
-      graft.ext.Multimodal.tiffStats(
+      graft.ext.Multimodal.tiffStats(Barrier(
         graft.ext.Multimodal.encodeTiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 20, rgb = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 20, rgb = true)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("sum_rowv"), col("n_strips"),
@@ -3565,14 +3381,12 @@ object SparkEntry {
     // 14. Same oracle as q347 VERBATIM — the wire changes, the samples
     // never do.
     "q348_tiff_rgb_pred" -> { (s, dir) =>
-      graft.ext.Multimodal.tiffStats(
+      graft.ext.Multimodal.tiffStats(Barrier(
         graft.ext.Multimodal.encodeTiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
           width = 20, bigEndian = true, lzw = true, predictor2 = true,
-          rgb = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          rgb = true)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("sum_rowv"), col("n_strips"),
@@ -3585,13 +3399,11 @@ object SparkEntry {
     // strip wires' values; n_strips counts tiles (3 across x ceil(h/16)
     // down), pinning the grid walk.
     "q336_tiff_tiled" -> { (s, dir) =>
-      graft.ext.Multimodal.tiffStats(
+      graft.ext.Multimodal.tiffStats(Barrier(
         graft.ext.Multimodal.encodeTiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, lzw = true, predictor2 = true, tiled = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, lzw = true, predictor2 = true, tiled = true)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("sum_rowv"), col("n_strips"))
@@ -3601,13 +3413,11 @@ object SparkEntry {
     // q297's oracle VERBATIM (byte order and compression change the
     // wire, never the pixels; the q288/q289 discipline).
     "q298_tiff_packbits" -> { (s, dir) =>
-      graft.ext.Multimodal.tiffStats(
+      graft.ext.Multimodal.tiffStats(Barrier(
         graft.ext.Multimodal.encodeTiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, bigEndian = true, packBits = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, bigEndian = true, packBits = true)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("sum_rowv"), col("n_strips"))
@@ -3615,12 +3425,10 @@ object SparkEntry {
     // Whole-corpus TIFF decode scale twin (E252's measurement): q297
     // with no doc cap — one IFD walk + strip pass per asset, byte-linear.
     "q300_tiff_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.tiffStats(
+      graft.ext.Multimodal.tiffStats(Barrier(
         graft.ext.Multimodal.encodeTiff(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          width = 40)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("sum_rowv"), col("n_strips"))
@@ -3629,11 +3437,9 @@ object SparkEntry {
     // with no doc cap — one Rice-decode + MD5 pass per asset,
     // byte-linear with O(blockSize) state.
     "q301_flac_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.flacStats(
+      graft.ext.Multimodal.flacStats(Barrier(
         graft.ext.Multimodal.encodeFlac(
-          graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)))
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)))))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("n_samples"), col("sum_s"), col("sum_abs"), col("sum_is"))
     },
@@ -3642,13 +3448,11 @@ object SparkEntry {
     // restarted at every strip. q304 hash-matches the q297/q298 oracle
     // VERBATIM (three compressions, one pixel identity).
     "q304_tiff_lzw" -> { (s, dir) =>
-      graft.ext.Multimodal.tiffStats(
+      graft.ext.Multimodal.tiffStats(Barrier(
         graft.ext.Multimodal.encodeTiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, lzw = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, lzw = true)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("sum_rowv"), col("n_strips"))
@@ -3659,13 +3463,11 @@ object SparkEntry {
     // match when the decoder reads EVERY frame's table (a GCT fallback
     // would miss all of them — there is no GCT to fall back to).
     "q306_gif_lct" -> { (s, dir) =>
-      graft.ext.Multimodal.gifStats(
+      graft.ext.Multimodal.gifStats(Barrier(
         graft.ext.Multimodal.encodeGif(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, frameHeight = 5, localPalettes = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, frameHeight = 5, localPalettes = true)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("n_pixels"), col("sum_idx"), col("sum_r"), col("sum_g"),
           col("sum_b"), col("sum_rowv"))
@@ -3676,13 +3478,11 @@ object SparkEntry {
     // pages, pinning page ORDER; the per-page geometry audit and the
     // cumulative pixel cap ride the same chain walk.
     "q307_tiff_multipage" -> { (s, dir) =>
-      graft.ext.Multimodal.tiffStats(
+      graft.ext.Multimodal.tiffStats(Barrier(
         graft.ext.Multimodal.encodeTiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, packBits = true, pageHeight = 6)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, packBits = true, pageHeight = 6)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"), col("sum_rowv"),
           col("n_strips"), col("n_pages"))
@@ -3694,13 +3494,11 @@ object SparkEntry {
     // strip walk; q308 hash-matches the q297/q298/q304 oracle VERBATIM
     // (four wires, one pixel identity).
     "q308_tiff_predictor2" -> { (s, dir) =>
-      graft.ext.Multimodal.tiffStats(
+      graft.ext.Multimodal.tiffStats(Barrier(
         graft.ext.Multimodal.encodeTiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, lzw = true, predictor2 = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, lzw = true, predictor2 = true)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("sum_rowv"), col("n_strips"))
@@ -3711,13 +3509,11 @@ object SparkEntry {
     // the code walk; q320 hash-matches the q297/q298/q304/q308 oracle
     // VERBATIM (five wires, one pixel identity).
     "q320_tiff_fillorder2" -> { (s, dir) =>
-      graft.ext.Multimodal.tiffStats(
+      graft.ext.Multimodal.tiffStats(Barrier(
         graft.ext.Multimodal.encodeTiff(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 40, lzw = true, fillOrder2 = true)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 40, lzw = true, fillOrder2 = true)))
         .select(col("asset_id"), col("is_valid"), col("width"),
           col("height"), col("n_pixels"), col("sum_v"),
           col("mean_v_milli"), col("sum_rowv"), col("n_strips"))
@@ -3729,13 +3525,11 @@ object SparkEntry {
     // its 64 audio samples, so the oracle reads the signed sample sums
     // straight off the truncated payload next to the video block replay.
     "q285_avi_av_stats" -> { (s, dir) =>
-      graft.ext.Multimodal.aviAvStats(
+      graft.ext.Multimodal.aviAvStats(Barrier(
         graft.ext.Multimodal.encodeAviAv(
           graft.ext.Multimodal.documentsAsAssets(
             Tables.documents(s, dir).filter(col("doc_id") < 140)),
-          width = 8, frameBytes = 128)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 8, frameBytes = 128)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("width"), col("frame_height"), col("n_pixels"),
           col("sum_v"), col("n_samples"), col("sum_s"), col("n_blocks"))
@@ -3745,12 +3539,10 @@ object SparkEntry {
     // decode per asset, cost linear in byte mass, the q281 pattern on the
     // newest (container) codec layer.
     "q284_mjpeg_scale" -> { (s, dir) =>
-      graft.ext.Multimodal.mjpegAviStats(
+      graft.ext.Multimodal.mjpegAviStats(Barrier(
         graft.ext.Multimodal.encodeMjpegAvi(
           graft.ext.Multimodal.documentsAsAssets(Tables.documents(s, dir)),
-          width = 8, frameBytes = 128)
-          .repartition(col("asset_id"))
-          .localCheckpoint())
+          width = 8, frameBytes = 128)))
         .select(col("asset_id"), col("is_valid"), col("n_frames"),
           col("width"), col("frame_height"), col("n_pixels"),
           col("sum_v"), col("mean_v_milli"), col("n_blocks"))

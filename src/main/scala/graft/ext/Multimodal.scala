@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Barrier
 import org.apache.spark.sql.types._
 
 /** Multimodal asset handling (north-star extension): image/audio/video
@@ -262,11 +263,10 @@ object Multimodal {
     *
     * Composition note: decode straight off a storage scan (the normal
     * case). If the input `bytes` is itself a wide synthesized expression
-    * (e.g. [[encodeBmp]] in the same plan), put a materialization boundary
-    * between the halves (`.repartition(...).localCheckpoint()` or a
-    * write/read) — otherwise predicate pushdown + scan-collapse inline the
-    * producer expression into every header-byte access (see q241's
-    * comment).
+    * (e.g. [[encodeBmp]] in the same plan), put a
+    * [[org.apache.spark.sql.graftshim.Barrier]] between the halves —
+    * otherwise predicate pushdown + CollapseProject inline the producer
+    * expression into every header-byte access.
     */
   /** Header parse shared by the BMP surfaces: field columns + `is_valid`.
     * Each header byte reads as hex of a ONE-BYTE binary slice — never one
@@ -2082,13 +2082,13 @@ object Multimodal {
     val u = conv(
       hex(expr("substring(bytes, cast(data_off + i + 1 as int), 1)")), 16, 10)
       .cast("long")
-    wavHeader(assets)
-      .filter(col("is_valid") && col("audio_fmt").isin(6L, 7L))
-      .select(col("asset_id"), col("bytes"), col("audio_fmt"),
-        col("data_off"), col("data_len"))
-      // container walk / sample walk boundary (the q241/Janino lesson)
-      .localCheckpoint()
-      .filter(col("data_len") >= 1L)
+    // container walk / sample walk boundary, ahead of the validity filter
+    // so the filter cannot push down into the header parse
+    Barrier(wavHeader(assets)
+      .select(col("asset_id"), col("bytes"), col("is_valid"),
+        col("audio_fmt"), col("data_off"), col("data_len")))
+      .filter(col("is_valid") && col("audio_fmt").isin(6L, 7L) &&
+        col("data_len") >= 1L)
       .select(col("asset_id"), col("bytes"), col("audio_fmt"),
         col("data_off"),
         explode(expr("sequence(0L, data_len - 1)")).as("i"))
@@ -2217,15 +2217,15 @@ object Multimodal {
         s" AS BIGINT)"
       s"CASE WHEN $u >= 32768 THEN $u - 65536 ELSE $u END"
     }
-    wavHeader(assets)
+    // container walk / sample walk boundary, ahead of the validity filter
+    // so the filter cannot push down into the header parse
+    Barrier(wavHeader(assets)
+      .select(col("asset_id"), col("bytes"), col("is_valid"),
+        col("audio_fmt"), col("channels"), col("data_off"),
+        expr("data_len div 4").as("n_frames")))
       .filter(col("is_valid") &&
         (col("audio_fmt") === 1L || col("audio_fmt") === 65534L) &&
-        col("channels") === 2L)
-      .select(col("asset_id"), col("bytes"), col("data_off"),
-        expr("data_len div 4").as("n_frames"))
-      // container walk / sample walk boundary (the q241/Janino lesson)
-      .localCheckpoint()
-      .filter(col("n_frames") >= 1L)
+        col("channels") === 2L && col("n_frames") >= 1L)
       .select(col("asset_id"), col("bytes"), col("data_off"),
         col("n_frames"),
         explode(expr("sequence(0L, n_frames - 1)")).as("f"))
@@ -2282,16 +2282,14 @@ object Multimodal {
           hex(expr("substring(bytes, cast(data_off + 2 * i + 2 as int), 1)")), 16, 10)
           .cast("long")
     val v = when(u >= 32768L, u - 65536L).otherwise(u)
-    wavHeader(assets)
+    // boundary between container walk and sample walk BEFORE the
+    // validity filter: a filter on is_valid would push down through the
+    // parse projections, substituting the whole dynamic chunk-walk tree
+    // into one giant predicate (the parse runs once per asset, the walk
+    // once per sample)
+    Barrier(wavHeader(assets)
       .select(col("asset_id"), col("bytes"), col("is_valid"), col("data_off"),
-        expr("data_len div 2").as("ns"))
-      // hard boundary between container walk and sample walk BEFORE the
-      // validity filter: a filter on is_valid would push down through the
-      // parse projections, substituting the whole dynamic chunk-walk tree
-      // into one giant predicate and blowing the fused stage past
-      // Janino's 64 KB method limit into interpreted fallback (the q241
-      // lesson — the parse runs once per asset, the walk once per sample)
-      .localCheckpoint()
+        expr("data_len div 2").as("ns")))
       // ns > 0 also guards sequence(0, -1), which would DESCEND, not be empty
       .filter(col("is_valid") && col("ns") > 0)
       .select(col("asset_id"), col("bytes"), col("data_off"),

@@ -33,6 +33,7 @@ class BenchCountersSpec extends SparkSpec {
       assert(agg.get.shuffleWrite > 0L, "the groupBy's shuffle write must be visible")
       assert(agg.get.shuffleRead > 0L, "the groupBy's shuffle read must be visible")
       assert(agg.get.tasks > 0L)
+      assert(agg.get.jobs >= 1L, "the sink's job must be counted")
     } finally sc.removeSparkListener(listener)
   }
 

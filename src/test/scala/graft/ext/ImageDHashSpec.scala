@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Barrier
 
 /** Perceptual image dedup (E220/E221): dHash grid math pinned on
   * hand-built images, then the LSH band join proven equal to brute force.
@@ -28,14 +29,11 @@ class ImageDHashSpec extends SparkSpec {
         struct(lit("test").as("source"), lit("bin").as("mime")).as("meta"))
   }
 
-  /** encodeBmp with the materialization boundary Multimodal's composition
-    * note prescribes for synthesized-bytes inputs — without it the encode
-    * expression inlines into every header-byte access of the decode and
-    * the fused stage outgrows Janino's 64 KB limit (the exact interpreted
-    * fallback the native walks exist to prevent).
+  /** encodeBmp behind the Barrier Multimodal's composition note
+    * prescribes for synthesized-bytes inputs.
     */
   private def encodedBmp(assets: org.apache.spark.sql.DataFrame, width: Int) =
-    Multimodal.encodeBmp(assets, width).localCheckpoint()
+    Barrier(Multimodal.encodeBmp(assets, width))
 
   test("dhash grid math: monotone gradient sets every bit, reverse sets none") {
     val assets = assetsOf(

@@ -482,6 +482,28 @@ class MultimodalSpec extends SparkSpec {
       "a mu-law WAV must not false-invalidate the container surface")
   }
 
+  test("WAV sample walks compile: the validity filter stays out of the header parse") {
+    // encoded WAVs come back through a real parquet scan: a LocalRelation
+    // input is constant-folded and never reaches codegen. With fallback
+    // off, a fused stage past Janino's 64 KB method limit throws instead of
+    // silently running interpreted.
+    val dir = java.nio.file.Files.createTempDirectory("graft_wav_walk").toString
+    val docs = Multimodal.documentsAsAssets(
+      Tables.documents(spark, sf0001).filter(col("doc_id") < 40))
+    Multimodal.encodeWav(docs, fmt = 7).write.parquet(s"$dir/ulaw")
+    Multimodal.encodeWav(docs, channels = 2).write.parquet(s"$dir/stereo")
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val ulaw = Multimodal.g711Stats(spark.read.parquet(s"$dir/ulaw")).collect()
+      assert(ulaw.length === 40 && ulaw.forall(_.getAs[Long]("law") === 7L))
+      val stereo =
+        Multimodal.wavChannelStats(spark.read.parquet(s"$dir/stereo")).collect()
+      assert(stereo.length === 40 && stereo.forall(_.getAs[Long]("n_frames") >= 1L))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("warcTextExtracts: 200s only, markup stripped, tokens counted") {
     import spark.implicits._
     // 6 slices of 32 bytes: slice 3 is the fixture 404 and must be

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Barrier
 
 /** Lossless-JPEG codec conformance (E229, ITU-T T.81 process 14 / SOF3).
   * The entropy bitstream below is hand-derived from the spec — Huffman
@@ -175,9 +176,8 @@ class JpegCodecSpec extends SparkSpec {
   test("engine round trip on real documents matches raw-byte sums") {
     val docs = Tables.documents(spark, sf0001).filter(col("doc_id") < 40)
     val assets = graft.ext.Multimodal.documentsAsAssets(docs)
-    val stats = graft.ext.Multimodal.jpegStats(
-      graft.ext.Multimodal.encodeJpegLossless(assets, width = 40)
-        .repartition(col("asset_id")).localCheckpoint())
+    val stats = graft.ext.Multimodal.jpegStats(Barrier(
+      graft.ext.Multimodal.encodeJpegLossless(assets, width = 40)))
       .collect()
     assert(stats.nonEmpty)
     val raw = docs.select(col("doc_id"), col("text").cast("binary").as("p"))

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Barrier
 
 /** Baseline (lossy, DCT) JPEG codec conformance (E231, ITU-T T.81
   * sequential DCT / SOF0).
@@ -465,9 +466,8 @@ class JpegDctCodecSpec extends SparkSpec {
   test("engine round trip on real documents matches the block replay") {
     val docs = Tables.documents(spark, sf0001).filter(col("doc_id") < 40)
     val assets = graft.ext.Multimodal.documentsAsAssets(docs)
-    val stats = graft.ext.Multimodal.jpegDctStats(
-      graft.ext.Multimodal.encodeJpegDct(assets, width = 8)
-        .repartition(col("asset_id")).localCheckpoint())
+    val stats = graft.ext.Multimodal.jpegDctStats(Barrier(
+      graft.ext.Multimodal.encodeJpegDct(assets, width = 8)))
       .collect()
     assert(stats.nonEmpty)
     val raw = docs.select(col("doc_id"), col("text").cast("binary").as("p"))

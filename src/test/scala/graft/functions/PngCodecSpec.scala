@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Barrier
 
 /** PNG codec conformance (E226) — the first entropy-coded format decoded
   * in-engine. The filter math is pinned per filter type on hand-built
@@ -457,9 +458,8 @@ class PngCodecSpec extends SparkSpec {
   test("engine round trip on real documents matches raw-payload channel sums") {
     val docs = Tables.documents(spark, sf0001).filter(col("doc_id") < 40)
     val assets = graft.ext.Multimodal.documentsAsAssets(docs)
-    val stats = graft.ext.Multimodal.pngStats(
-      graft.ext.Multimodal.encodePng(assets, width = 6)
-        .repartition(col("asset_id")).localCheckpoint())
+    val stats = graft.ext.Multimodal.pngStats(Barrier(
+      graft.ext.Multimodal.encodePng(assets, width = 6)))
       .collect()
     assert(stats.nonEmpty)
     val raw = docs.select(col("doc_id"), col("text").cast("binary").as("p"))
