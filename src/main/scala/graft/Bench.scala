@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import scala.jdk.CollectionConverters._
 
 /** Per-query task-metric aggregation, keyed by job group. Wall time on a
   * shared box conflates engine cost with scheduler noise (a 23% total swing
@@ -166,35 +167,65 @@ object ByteDrift {
   * (dev loop, e.g. `runMain graft.Bench q22,q51`).
   */
 object Bench {
+
+  /** Warm the JVM/codegen/scan paths once so the first timed query does
+    * not absorb session startup (measures queries, not JIT). */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
+  }
+
+  /** One timed run of `df` through the noop sink under job group `group`:
+    * wall seconds (building the frame included), or what the run threw.
+    * Noop sink, NOT count(): count()'s column pruning lets Catalyst
+    * eliminate whole subtrees (a curve query ending in left joins from a
+    * literal fractions frame optimizes to count(LocalRelation) — 0.2 s
+    * "measured" for a multi-second pair join). The noop writer
+    * materializes every output row through the full plan.
+    */
+  def timeNoop(spark: SparkSession, group: String, description: String = "",
+      interruptOnCancel: Boolean = false)(df: => DataFrame): Either[Throwable, Double] = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, description, interruptOnCancel)
+    val t0 = System.nanoTime()
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable => Left(e) }
+    finally sc.clearJobGroup()
+  }
+
+  private def sh(cmd: Seq[String]): String = try {
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
+    p.waitFor(); if (p.exitValue() == 0) out else "unknown"
+  } catch { case _: Exception => "unknown" }
+
+  /** Git provenance as (commit, dirty); dirty is the JSON literal `true`,
+    * `false` or `null` (no git). A HEAD hash with uncommitted source
+    * changes names a binary no commit reproduces, so dirty is scoped to the
+    * BINARY-affecting paths: regenerated bench/ artifacts and docs do not
+    * change what ran. :(top) anchors the pathspecs at the repo root — a
+    * bare "src" resolves against the cwd and matches nothing when a harness
+    * is launched from a subdirectory (dirty:false on a dirty tree).
+    */
+  def gitProvenance(): (String, String) = {
+    val dirty = sh(Seq("git", "status", "--porcelain", "--",
+        ":(top)src", ":(top)tools", ":(top)build.sbt", ":(top)project")) match {
+      case "unknown" => "null"
+      case s => (!s.isEmpty).toString
+    }
+    (sh(Seq("git", "rev-parse", "HEAD")), dirty)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The suite compiles ~15k distinct whole-stage/expression classes per
-      // pass — two orders of magnitude past the default 100-entry codegen
-      // cache, so even the MIN-of-3 pass pays full Janino recompiles (the
-      // per-query generated sources are deterministic across passes).
-      // Sizing the cache to hold one pass turns passes 2-3 into compile-free
-      // runs — measured ~25-30% off the latency-bound iterative queries
-      // (q93 3.58->2.28, q226 3.04->2.09) with results untouched. This is a
-      // JVM-compile-cache setting (same class of effect as the JIT warmup
-      // the bench already embraces), scale-neutral, and applied identically
-      // at every SPARK_GRAFT_CPUS the driver measures with.
-      .config("spark.sql.codegen.cache.maxEntries", "65536")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new QueryTaskMetricsListener
     spark.sparkContext.addSparkListener(metrics)
 
-    // Warm up the JVM/codegen/scan paths once so the first timed query does
-    // not absorb session startup (measures queries, not JIT).
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
+    warmUp(spark, sfDir)
 
     // Fixed CPU-bound probe, min-of-3. Warmed until stable BEFORE the first
     // timed sample so the start/end comparison measures machine load, not
@@ -225,61 +256,54 @@ object Bench {
       onlyPrefixes.forall(_.exists(name.startsWith))
     }
 
-    // Read the PREVIOUS committed summary's headline BEFORE overwriting it:
-    // the new total is compared against it below (drift_vs_committed).
+    // Read the PREVIOUS committed summary BEFORE overwriting it: its
+    // headline (1st line) is what drift_vs_committed compares the new total
+    // against, its per-query counters line (3rd) feeds the shuffle-byte
+    // drift gate. Guarded end-to-end: a truncated/blank/garbled previous
+    // summary must degrade to "no baseline", never abort the bench before
+    // a query runs.
     val summaryPath = java.nio.file.Paths.get("bench", "summary_latest.json")
-    // guarded end-to-end: a truncated/blank/garbled previous summary must
-    // degrade to "no baseline", never abort the bench before a query runs
+    val prevLines: Seq[String] =
+      try java.nio.file.Files.readAllLines(summaryPath).asScala.toSeq
+      catch { case _: Exception => Nil }
     val (prevCommitted: Option[(Double, String)], prevSf: Option[String]) =
-      try {
-        if (java.nio.file.Files.exists(summaryPath)) {
-          val first = java.nio.file.Files.readAllLines(summaryPath).get(0)
-          val v = """"value":([0-9]+(?:\.[0-9]+)?(?:[Ee][+-]?[0-9]+)?)""".r
-            .findFirstMatchIn(first).flatMap(m => m.group(1).toDoubleOption)
-          val c = """"commit":"([0-9a-f]+)"""".r.findFirstMatchIn(first).map(_.group(1))
-          val sf = """"sf":"([^"]+)"""".r.findFirstMatchIn(first).map(_.group(1))
-          (v.map(total => (total, c.getOrElse("unknown"))), sf)
-        } else (None, None)
-      } catch { case _: Exception => (None, None) }
-    // the committed per-query counters line (3rd line of the summary file)
-    // for the shuffle-byte drift gate — same degrade-to-no-baseline rule
+      prevLines.headOption.map { first =>
+        val v = """"value":([0-9]+(?:\.[0-9]+)?(?:[Ee][+-]?[0-9]+)?)""".r
+          .findFirstMatchIn(first).flatMap(m => m.group(1).toDoubleOption)
+        val c = """"commit":"([0-9a-f]+)"""".r.findFirstMatchIn(first).map(_.group(1))
+        val sf = """"sf":"([^"]+)"""".r.findFirstMatchIn(first).map(_.group(1))
+        (v.map(total => (total, c.getOrElse("unknown"))), sf)
+      }.getOrElse((None, None))
     val prevCounters: Map[String, (Long, Long)] =
-      try {
-        if (java.nio.file.Files.exists(summaryPath)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.readAllLines(summaryPath).asScala
-            .find(_.contains("\"metric\":\"query_counters\""))
-            .map(ByteDrift.parseCounters).getOrElse(Map.empty)
-        } else Map.empty
-      } catch { case _: Exception => Map.empty }
+      try prevLines.find(_.contains("\"metric\":\"query_counters\""))
+        .map(ByteDrift.parseCounters).getOrElse(Map.empty)
+      catch { case _: Exception => Map.empty }
 
     final case class QRes(
         var wall: Double = -1.0, var lastWall: Double = -1.0, var rows: Long = -1L,
         var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L,
         var inputBytes: Long = 0L, var recordsRead: Long = 0L,
-        var peakMem: Long = 0L, var cpuMin: Double = -1.0, var jobs: Long = 0L)
+        var peakMem: Long = 0L, var cpuMin: Double = -1.0, var jobs: Long = 0L,
+        var error: Option[String] = None)
     val passes = 3
     val best = collection.mutable.LinkedHashMap[String, QRes]()
     for (pass <- 1 to passes; (name, fn) <- queries) {
       val res = best.getOrElseUpdate(name, QRes())
       val group = s"$name#$pass"
       metrics.reset(group)
-      spark.sparkContext.setJobGroup(group, name)
       // Output-row count via an Observation (a CollectMetrics node over the
       // rows the sink receives): exact, sink-agnostic, and load-invariant.
       val obs = org.apache.spark.sql.Observation(s"rows_$group")
-      val t0 = System.nanoTime()
-      val t = try {
-        // noop sink, NOT count(): count()'s column pruning lets Catalyst
-        // eliminate whole subtrees (a curve query ending in left joins
-        // from a literal fractions frame optimizes to count(LocalRelation)
-        // — 0.2 s "measured" for a multi-second pair join). The noop
-        // writer materializes every output row through the full plan.
-        fn(spark, sfDir).observe(obs, count(lit(1)).as("n"))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-      spark.sparkContext.clearJobGroup()
+      val t = timeNoop(spark, group, name)(
+          fn(spark, sfDir).observe(obs, count(lit(1)).as("n"))) match {
+        case Right(wall) => wall
+        case Left(e) =>
+          // a query that throws in any pass fails the run (n_failed below);
+          // its first exception class names the failure
+          if (res.error.isEmpty) res.error = Some(e.getClass.getName)
+          System.err.println(s"[bench] $name pass $pass failed: $e")
+          -1.0
+      }
       if (t >= 0 && (res.wall < 0 || t < res.wall)) res.wall = t
       if (t >= 0) {
         // counters OUTSIDE the timed region: drain the async listener bus,
@@ -343,28 +367,15 @@ object Bench {
     val totShufW = best.values.map(_.shuffleWrite).sum
     val totRows = best.values.map(_.rows).filter(_ >= 0).sum
     val totCpu = best.values.map(_.cpuMin).filter(_ >= 0).sum
+    // failures are loud: counted and named (with the exception class) on
+    // both stdout lines, never silently dropped from the total
+    val failed = best.flatMap { case (k, v) => v.error.map(k -> _) }
+    val failedJson = s""""n_failed":${failed.size},"failed":""" +
+      failed.map { case (k, e) => s""""$k":"$e"""" }.mkString("{", ",", "}")
 
     // Provenance: committed summaries from different runners/hosts/commits
     // must stay distinguishable, and drift must compare like with like.
-    def sh(cmd: Seq[String]): String = try {
-      val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-      val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
-      p.waitFor(); if (p.exitValue() == 0) out else "unknown"
-    } catch { case _: Exception => "unknown" }
-    val commit = sh(Seq("git", "rev-parse", "HEAD"))
-    // a HEAD hash with uncommitted source changes names a binary that no
-    // commit reproduces — record that, or the hash lies. Scoped to the
-    // BINARY-affecting paths: regenerated bench/ artifacts and docs do not
-    // change what ran, and counting them would mark every second
-    // certification run dirty forever.
-    // :(top) anchors the pathspecs at the repo root — a bare "src" would
-    // resolve against the process cwd and silently match nothing when the
-    // bench is launched from a subdirectory (dirty:false on a dirty tree)
-    val dirty = sh(Seq("git", "status", "--porcelain", "--",
-        ":(top)src", ":(top)tools", ":(top)build.sbt", ":(top)project")) match {
-      case "unknown" => "null"
-      case s => (!s.isEmpty).toString
-    }
+    val (commit, dirty) = gitProvenance()
     val host = try { java.net.InetAddress.getLocalHost.getHostName }
       catch { case _: Exception => "unknown" }
     val runner = sys.env.getOrElse("SPARK_GRAFT_RUNNER", "unknown")
@@ -415,9 +426,10 @@ object Bench {
       // recorded so cross-round comparisons can attribute them (the
       // codegen-cache sizing alone was ~1.38x of the r14 same-session
       // total; see OPTIMIZATION_r14.md)
-      s""""session_configs":{"spark.sql.codegen.cache.maxEntries":"65536"},""" +
+      s""""session_configs":{"spark.sql.codegen.cache.maxEntries":""" +
+      s""""${spark.conf.get("spark.sql.codegen.cache.maxEntries")}"},""" +
       f""""sentinel_start_sec":$sentinelStart%.3f,"sentinel_end_sec":$sentinelEnd%.3f,""" +
-      f""""sentinel_drift":$drift%.2f,"load_flagged":$loadFlagged,$provenance}"""
+      f""""sentinel_drift":$drift%.2f,"load_flagged":$loadFlagged,$failedJson,$provenance}"""
     println(detail)
     // ...then a SHORT summary line LAST. The driver keeps only the tail of
     // the output, so the ~9 KB detail line gets its head (and the headline
@@ -429,7 +441,7 @@ object Bench {
       f""""sentinel_drift":$drift%.2f,"load_flagged":$loadFlagged,"sf":"$sfDir",""" +
       s""""total_shuffle_read_bytes":$totShufR,"total_shuffle_write_bytes":$totShufW,""" +
       f""""total_output_rows":$totRows,"total_cpu_s":$totCpu%.1f,""" +
-      s"""$driftVsCommitted,$byteDriftJson,$provenance}"""
+      s"""$failedJson,$driftVsCommitted,$byteDriftJson,$provenance}"""
     println(trailer)
     // Load-invariant per-query counters (file-only; the stdout lines stay
     // small for the driver's tail-scrape). Shuffle bytes and output rows
@@ -459,10 +471,12 @@ object Bench {
       // baseline forces the clean retake at the same commit to ship
       // drift_vs_committed flagged against a discarded run (the r10
       // cosmetic) — flagged runs land in summary_flagged.json so the next
-      // clean run still compares against the previous CLEAN total.
+      // clean run still compares against the previous CLEAN total. A run
+      // with a failed query is never a baseline either: its total is short
+      // by the failed queries' time.
       val target =
         if (onlyPrefixes.nonEmpty) "summary_dev.json"
-        else if (loadFlagged) "summary_flagged.json"
+        else if (loadFlagged || failed.nonEmpty) "summary_flagged.json"
         else "summary_latest.json"
       java.nio.file.Files.writeString(dir.resolve(target),
         trailer + "\n" + detail + "\n" + countersLine + "\n")
@@ -470,5 +484,6 @@ object Bench {
       System.err.println(s"bench summary file write failed: $e")
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

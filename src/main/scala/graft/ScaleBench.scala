@@ -227,7 +227,6 @@ object ScaleBench {
     // events from a cancelled earlier pass must not fold into this pass
     val group = s"scale:$name:$dir#$pass"
     metrics.reset(group)
-    spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
     val watchdog = new java.util.Timer(true)
     watchdog.schedule(new java.util.TimerTask {
       def run(): Unit = {
@@ -235,11 +234,9 @@ object ScaleBench {
         spark.sparkContext.cancelJobGroup(group)
       }
     }, timeoutSec * 1000L)
-    val t0 = System.nanoTime()
     try {
-      SparkEntry.queries(name)(spark, dir).write.format("noop")
-        .mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = Bench.timeNoop(spark, group, name, interruptOnCancel = true)(
+        SparkEntry.queries(name)(spark, dir)).fold(e => throw e, identity)
       org.apache.spark.graftshim.ListenerFlush.waitUntilEmpty(spark.sparkContext)
       // a MISSING snapshot is unknown (-1), never "zero shuffle" — zero
       // would silently disable the byte gate for a shuffle-heavy query
@@ -250,7 +247,6 @@ object ScaleBench {
       System.err.println(s"[scale] $name @ $dir failed: $e"); (-1.0, -1.0)
     } finally {
       watchdog.cancel()
-      spark.sparkContext.clearJobGroup()
       metrics.reset(group)
     }
   }
@@ -268,21 +264,11 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val workDir = args.headOption.getOrElse("/tmp/graft_scale_v2")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new QueryTaskMetricsListener
     spark.sparkContext.addSparkListener(metrics)
-    // warm the JVM/codegen/scan paths so the first timed point doesn't
-    // absorb session startup (Bench's discipline)
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$baseDir/region.parquet").groupBy("r_name").count().collect()
+    Bench.warmUp(spark, baseDir)
 
     // ---- synthesis (reused per table via _SUCCESS, repaired if partial) ----
     for (k <- uniformScales)
@@ -304,10 +290,7 @@ object ScaleBench {
     for (p <- 1 to passes; (q, model, k) <- work) {
       val (t, b) = timeOnce(spark, metrics, q, s"$workDir/${model}_x$k", p)
       val key = (q, model, k)
-      points.get(key) match {
-        case Some(prev) if prev >= 0 && (t < 0 || prev <= t) => ()
-        case _ => points(key) = t
-      }
+      if (points.get(key).forall(prev => prev < 0 || (t >= 0 && t < prev))) points(key) = t
       if (b >= 0) bytesPts(key) = b
       // b < 0 is the "metrics missing" sentinel — don't print it as -0.0 MB
       val mb = if (b >= 0) f"${b / 1e6}%.1f MB shuffled" else "shuffle bytes unknown"
@@ -315,22 +298,7 @@ object ScaleBench {
     }
 
     // ---- fit + report ----
-    def sh(cmd: Seq[String]): String = try {
-      val pr = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-      val out = new String(pr.getInputStream.readAllBytes(), "UTF-8").trim
-      pr.waitFor(); if (pr.exitValue() == 0) out else "unknown"
-    } catch { case _: Exception => "unknown" }
-    val commit = sh(Seq("git", "rev-parse", "HEAD"))
-    // a HEAD hash with uncommitted source changes names a binary that no
-    // commit reproduces — record that, or the hash lies. Scoped to the
-    // BINARY-affecting paths (Bench's discipline): regenerated bench/
-    // artifacts and docs do not change what ran.
-    // :(top) anchors at the repo root regardless of the process cwd
-    val dirty = sh(Seq("git", "status", "--porcelain", "--",
-        ":(top)src", ":(top)tools", ":(top)build.sbt", ":(top)project")) match {
-      case "unknown" => "null"
-      case s => (!s.isEmpty).toString
-    }
+    val (commit, dirty) = Bench.gitProvenance()
     val ts = java.time.Instant.now().toString
     val tol = 0.15
 

@@ -1,8 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The last stdout
+  * line is `{"metric":"verify","n_queries":N,"retried":[...],"failed":[...]}`:
+  * `retried` names every query whose first attempt threw, `failed` those
+  * whose retry threw too. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -11,17 +14,13 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    val selectedQueries = SparkEntry.queries.filter(kv => selected(kv._1))
+    val retried = mutable.ArrayBuffer[String]()
+    val failed = mutable.ArrayBuffer[String]()
+    selectedQueries.foreach { case (name, fn) =>
       // one retry per query: a transient failure (timeout, race) must not
       // zero a round's correctness entry for an otherwise-green query
       val ok = (1 to 2).exists { attempt =>
@@ -33,10 +32,14 @@ object Verify {
           case e: Throwable =>
             System.err.println(s"[verify] $name attempt $attempt failed: $e")
             e.printStackTrace()
+            if (attempt == 1) retried += name
             false
         }
       }
-      if (!ok) System.err.println(s"[verify] $name FAILED after retries")
+      if (!ok) {
+        System.err.println(s"[verify] $name FAILED after retries")
+        failed += name
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -54,5 +57,8 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    println(s"""{"metric":"verify","n_queries":${selectedQueries.size},""" +
+      s""""retried":${retried.map(q).mkString("[", ",", "]")},""" +
+      s""""failed":${failed.map(q).mkString("[", ",", "]")}}""")
   }
 }

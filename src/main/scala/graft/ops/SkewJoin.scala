@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Skew-mitigation join (SURVEY "Partitioning & shuffle": salting for skew).
   *
   * AQE's skew-join split handles most cases at runtime
-  * (`spark.sql.adaptive.skewJoin.enabled`, on in GraftSession); explicit
+  * (`spark.sql.adaptive.skewJoin.enabled`, on by Spark default); explicit
   * salting remains the tool when one hot key dominates a shuffle so badly
   * that even split partitions overwhelm a task — e.g. a null-heavy FK or a
   * "default tenant" key at 100 TB.

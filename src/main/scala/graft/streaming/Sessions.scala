@@ -35,7 +35,7 @@ object Sessions {
     floor(ns.cast("decimal(25,0)") / 1000).cast("long")
 
   /** TIMESTAMP/TIMESTAMP_NTZ → epoch µs. The session timezone is pinned
-    * to UTC (GraftSession), so the NTZ→LTZ cast is numerically the
+    * to UTC in every GraftSession, so the NTZ→LTZ cast is numerically the
     * identity and this matches DuckDB's epoch_us over the same parquet.
     */
   def tsToUs(ts: Column): Column = unix_micros(ts.cast("timestamp"))

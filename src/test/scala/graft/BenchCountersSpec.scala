@@ -55,6 +55,18 @@ class BenchCountersSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("a timed noop run returns the exception of a frame that throws at execution") {
+    val sc = spark.sparkContext
+    val r = Bench.timeNoop(spark, "bench-counters-spec-throws")(
+      spark.range(0, 10).select(raise_error(lit("boom"))))
+    assert(r.isLeft, s"a throwing frame must not produce a wall time: $r")
+    assert(r.left.exists(_.getMessage.contains("boom")))
+    assert(sc.getLocalProperty("spark.jobGroup.id") === null,
+      "the job group must be cleared after a failed run")
+    assert(Bench.timeNoop(spark, "bench-counters-spec-ok")(spark.range(0, 10).toDF())
+      .exists(_ >= 0.0))
+  }
+
   test("byte-drift gate: counters parse, and a synthetic plan change flags") {
     // a committed query_counters line in the exact format Bench writes
     val line =

@@ -7,6 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * getOrCreate; suites must not stop() it).
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = GraftSession.builder().master("local[4]").getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
   lazy val sf0001 = "/root/testdata/sf0.001"
 }

@@ -77,7 +77,7 @@ class AqeInteropSpec extends SparkSpec {
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
       // one hot key carrying ~97% of rows + a spread of cold keys
       val left = spark.range(0, 60000)
-        .select(when(col("id") % 30 =!= 0, col("id") % 1000).otherwise(lit(7L)).as("k"),
+        .select(when(col("id") % 30 === 0, col("id") % 1000).otherwise(lit(7L)).as("k"),
           col("id").as("v"))
       val right = spark.range(0, 1000).select(col("id").as("k"),
         (col("id") * 10).as("w"))
