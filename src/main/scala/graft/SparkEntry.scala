@@ -1581,10 +1581,9 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       val pairs = Dedup.nearDuplicates(docs, minJaccard = 0.5).select("id_a", "id_b")
       val cl = Dedup.dedupClusters(pairs).withColumnRenamed("id", "doc_id")
-      // the per-doc quality-score expression is the heavy pass and rides
-      // the single local scan split — spread first (no-op at scale)
-      val scored = graft.ext.Spread
-        .byKeyPinned(docs.select("doc_id", "text"), col("doc_id"))
+      // the per-doc quality-score expression is the heavy pass
+      val scored = graft.ext.Spread.of(docs)
+        .byKey(docs.select("doc_id", "text"), col("doc_id"))
         .join(cl, Seq("doc_id"), "left")
         .select(
           floor(TextAnalysis.qualityScore(col("text")) * 1000000.0).cast("long")
@@ -1863,10 +1862,10 @@ object SparkEntry {
     // distribution over the full shingle vocabulary — collision-rate
     // evidence behind the q89 defaults, per power-of-two error bucket.
     "q230_cms_error_profile" -> { (s, dir) =>
-      // shingling is the heaviest per-row pass here and rides the scan's
-      // few local splits — spread the docs first (no-op at scale)
-      val shingles = graft.ext.Spread
-        .byKeyPinned(Tables.documents(s, dir).select("doc_id", "text"), col("doc_id"))
+      // shingling is the heaviest per-row pass here
+      val docs = Tables.documents(s, dir)
+      val shingles = graft.ext.Spread.of(docs)
+        .byKey(docs.select("doc_id", "text"), col("doc_id"))
         .select(explode(
           graft.ext.Dedup.shingles(lower(col("text")), 3)).as("shingle"))
       graft.ext.Sketches.cmsErrorProfile(shingles, "shingle")
@@ -2262,12 +2261,7 @@ object SparkEntry {
         col("source"))
       graft.ext.Multimodal.fingerprintNearDup(
         graft.ext.Multimodal.audioFingerprint128(
-          graft.ext.Multimodal.documentsAsAssets(docs.unionByName(variants))
-            // spread the per-asset synthesis+window walk across cores: the
-            // single-split local scan otherwise runs it serially (at scale
-            // the scan arrives multi-split and this is a cheap same-key
-            // reshuffle)
-            .repartition(col("asset_id")),
+          graft.ext.Multimodal.documentsAsAssets(docs.unionByName(variants)),
           windowSamples = 1),
         Seq("f0", "f1", "f2", "f3"), maxHamming = 6)
     },

@@ -55,9 +55,8 @@ object Decontaminate {
       .select(col("gh")).distinct()
       .withColumn("__hit", lit(1))
     // the corpus gram pass (shingle + explode + hash per doc) is the
-    // dominant cost and rides the scan's few local splits — spread the
-    // pruned candidate rows first (structural no-op at scale)
-    val spreadCand = Spread.byKeyPinned(
+    // dominant cost — spread the pruned candidate rows first
+    val spreadCand = Spread.of(candidates).byKey(
       candidates.select(col(idCol), col(textCol)), col(idCol))
     val perDoc = gramRows(spreadCand, idCol, textCol, n, seed, portable)
       .join(broadcast(bench), Seq("gh"), "left")

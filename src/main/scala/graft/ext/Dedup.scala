@@ -505,11 +505,14 @@ object Dedup {
       docs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id",
-      portable: Boolean = true): DataFrame = {
-    // the tokenize + 60-bit-sum pass is the corpus-wide work and otherwise
-    // rides the scan's few local splits serially (§2.5; no-op at scale)
-    val toks = Spread.byKeyCapped(docs.select(col(idCol), col(textCol)),
-        col(idCol))
+      portable: Boolean = true): DataFrame =
+    simhashBy(Spread.of(docs), docs, textCol, idCol, portable)
+
+  private def simhashBy(
+      spread: Spread, docs: DataFrame, textCol: String, idCol: String,
+      portable: Boolean): DataFrame = {
+    // the tokenize + 60-bit-sum pass is the corpus-wide work
+    val toks = spread.byKey(docs.select(col(idCol), col(textCol)), col(idCol))
       .select(
         col(idCol),
         explode(array_distinct(split(col(textCol), " "))).as("tok"))
@@ -547,24 +550,16 @@ object Dedup {
       maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3,
       s"4x15-bit banding is only complete for maxHamming <= 3, got $maxHamming")
-    val sig = simhash(docs, textCol, idCol)
+    val spread = Spread.of(docs)
+    val sig = simhashBy(spread, docs, textCol, idCol, portable = true)
     val bands0 = sig.select(col(idCol).as("id"), col("simhash"),
       posexplode(array((0 until 4).map(i =>
         shiftright(col("simhash"), i * 15).bitwiseAND(0x7FFFL)): _*))
         .as(Seq("band_idx", "band_val")))
-    // The band self-join's exchange carries a few MB of signature rows, so
-    // AQE's small-shuffle coalescing folds the join, pair distinct and
-    // Hamming verify (the query's heaviest stage) onto ONE task in
-    // local-tiny mode. A width-pinned repartition by the join keys
-    // SATISFIES the join's clustering (both aliased sides share the one
-    // exchange via ReuseExchange) and cannot be coalesced; at scale the
-    // guard never fires (probe on the input docs frame — bands itself
-    // hangs off the signature aggregation, not a file scan).
-    val bands =
-      if (Spread.localTiny(docs))
-        bands0.repartition(docs.sparkSession.sparkContext.defaultParallelism,
-          col("band_idx"), col("band_val"))
-      else bands0
+    // The band self-join, pair distinct and Hamming verify are the
+    // query's heaviest stage. Spread by the join keys: both aliased sides
+    // share the one exchange via ReuseExchange.
+    val bands = spread.byKey(bands0, col("band_idx"), col("band_val"))
     // Hamming-filter BEFORE the pair distinct (§2.3 — filter before the
     // exchange): hamming is a function of the pair's signatures, so the
     // result set is identical, but the xor+popcount kills the ~all-false
@@ -680,7 +675,7 @@ object Dedup {
     * [[winnowSourceMatrix]]'s cross-source copy matrix.
     */
   private def winnowedFpRows(
-      docs: DataFrame, textCol: String, idCol: String,
+      spread: Spread, docs: DataFrame, textCol: String, idCol: String,
       k: Int, w: Int, seed: Int, portable: Boolean): DataFrame = {
     require(k >= 1 && w >= 1, s"need k >= 1 and w >= 1, got $k/$w")
     import org.apache.spark.sql.expressions.Window
@@ -688,11 +683,10 @@ object Dedup {
     // previous count-over-window re-shuffled and re-sorted the whole gram
     // stream just to recount what the array already knows
     // spread the docs before the gram explode: the tokenize+hash pass is
-    // the corpus-wide work, and on a small-split local scan it otherwise
-    // runs on 1-2 cores (guide §2.5; structural no-op at scale). Keyed by
-    // id, the repartition ALSO satisfies the sliding window's clustering
-    // requirement below, so no second exchange of the exploded gram stream
-    val spreadDocs = Spread.byKeyCapped(
+    // the corpus-wide work. Keyed by id, the repartition ALSO satisfies the
+    // sliding window's clustering requirement below, so no second exchange
+    // of the exploded gram stream
+    val spreadDocs = spread.byKey(
       docs.select(col(idCol), col(textCol)), col(idCol))
     val grams = spreadDocs
       .select(col(idCol), graft.functions.TextNativeFunctions.ngrams(
@@ -735,7 +729,8 @@ object Dedup {
     // sharing fan-out via a window over gh, NOT a groupBy+join-back — the
     // latter re-evaluates the whole explode pipeline once per branch
     // (the double-branch recomputation trap)
-    val fp = winnowedFpRows(docs, textCol, idCol, k, w, seed, portable)
+    val fp = winnowedFpRows(
+        Spread.of(docs), docs, textCol, idCol, k, w, seed, portable)
       .withColumn("n_docs",
         size(collect_set(col(idCol)).over(Window.partitionBy(col("gh")))).cast("long"))
     fp.groupBy(col(idCol))
@@ -775,7 +770,8 @@ object Dedup {
     // pinned: three consumers (totals + both join sides) would otherwise
     // re-run the whole winnow pipeline per branch; the distinct
     // (source, fingerprint) projection is vocabulary-scale, not corpus-scale
-    val srcFp = winnowedFpRows(docs, textCol, idCol, k, w, seed, portable)
+    val srcFp = winnowedFpRows(
+        Spread.of(docs), docs, textCol, idCol, k, w, seed, portable)
       .join(docs.select(col(idCol), col(sourceCol).as("__src")), Seq(idCol))
       .select(col("__src"), col("gh"))
       .distinct()
@@ -826,7 +822,8 @@ object Dedup {
   private def winnowPairMatches(
       docs: DataFrame, textCol: String, idCol: String,
       k: Int, w: Int, seed: Int, portable: Boolean): DataFrame = {
-    val fp = winnowedFpRows(docs, textCol, idCol, k, w, seed, portable)
+    val spread = Spread.of(docs)
+    val fp = winnowedFpRows(spread, docs, textCol, idCol, k, w, seed, portable)
       .select(col(idCol).as("__id"), col("gh"))
       .distinct()
       .localCheckpoint()
@@ -843,11 +840,9 @@ object Dedup {
       .union(pairs.select(col("id_b").as(idCol)))
       .distinct()
     // spread the candidate docs before the positional-gram explode: the
-    // per-doc tokenize+hash is the heavy part and otherwise rides the
-    // (single-split) scan serially in local-tiny mode (§2.5; no-op at scale)
+    // per-doc tokenize+hash is the heavy part
     val grams = posGramHashes(
-      Spread.byKeyCapped(
-        docs.join(ids, Seq(idCol), "left_semi"), col(idCol)),
+      spread.byKey(docs.join(ids, Seq(idCol), "left_semi"), col(idCol)),
       idCol, textCol, k, seed, portable)
       .localCheckpoint()
     pairs

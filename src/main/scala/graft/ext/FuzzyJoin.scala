@@ -199,23 +199,17 @@ object FuzzyJoin {
         graft.functions.TextNativeFunctions.shingles(
           docs.sparkSession, lower(col(textCol)), shingleK)
       else array_distinct(split(lower(col(textCol)), " "))
-    // One parallel, pinned shingle-array table (guide §2.4 — remove
-    // repeated work): repartition the docs by id BEFORE the expensive
-    // shingle pass so tokenization runs on every core instead of serially
-    // inside the single-split parquet scan stage, and localCheckpoint the
-    // arrays — the downstream consumers (df counts, rarity ranking, the
-    // two verify probes) would otherwise each re-run the shingle subtree.
+    // One pinned shingle-array table (guide §2.4 — remove repeated work):
+    // the downstream consumers (df counts, rarity ranking, the two verify
+    // probes) would otherwise each re-run the shingle subtree.
     // n (the doc's DISTINCT element count) is the array size: both element
     // spaces are distinct arrays (array_distinct / the native shingle
     // expression), so size(es) equals the per-id exploded row count the
     // old count-over-window computed — this also removes that second
     // window pass and the two trailing size joins.
-    // pinLocal, not a bare localCheckpoint: at scale an executor-local pin
-    // of one row per doc with its full shingle array is corpus-sized,
-    // non-recomputable state — there the consumers re-run the (map-side)
-    // tokenize subtree instead (see Spread.pinLocal)
-    val arrays = Spread.pinLocal(
-      Spread.byKey(docs, col(idCol))
+    val spread = Spread.of(docs)
+    val arrays = spread.pin(
+      docs
         .select(col(idCol).as("id"), elems.as("es"))
         .select(col("id"), size(col("es")).as("n"), col("es")))
     val toks = arrays.select(col("id"), col("n"), explode(col("es")).as("tok"))
@@ -223,19 +217,8 @@ object FuzzyJoin {
     // The rarity window's exchange is the LAST shuffle before the prefix
     // join (a broadcast join) — everything downstream (window, prefix
     // filters, the candidate BHJ, the distinct's map side and the
-    // array_intersect verify) runs at ITS width. The shuffle is a few MB
-    // of token rows, so in local-tiny mode AQE's small-shuffle coalescing
-    // folds all of that CPU onto a handful of tasks; an explicit
-    // width-pinned repartition by id SATISFIES the window's clustering
-    // (same exchange count — it replaces the planner's own exchange) and
-    // cannot be coalesced. At scale the guard never fires and AQE's
-    // byte-based sizing stands.
-    val rankedIn =
-      if (Spread.localTiny(docs))
-        toks.join(dfreq, Seq("tok")).repartition(
-          docs.sparkSession.sparkContext.defaultParallelism, col("id"))
-      else toks.join(dfreq, Seq("tok"))
-    val ranked = rankedIn
+    // array_intersect verify) runs at ITS width.
+    val ranked = spread.byKey(toks.join(dfreq, Seq("tok")), col("id"))
       .withColumn("pos", row_number().over(
         Window.partitionBy(col("id")).orderBy(col("df").asc, col("tok").asc)))
     // ASYMMETRIC prefixes (the PPJoin index/probe split, Xiao et al.,

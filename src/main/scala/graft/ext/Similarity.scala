@@ -57,7 +57,6 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     val q = broadcast(prepared(queries, idCol, vecCol, "query_id", "q_vec", "q_nrm"))
     val c = prepared(corpus, idCol, vecCol, "neighbor_id", "c_vec", "c_nrm")
-      .repartition(col("neighbor_id")) // spread the stream side across cores
     val scored = c.crossJoin(q)
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(
@@ -539,12 +538,10 @@ object Similarity {
     //    it re-evaluates the whole nlist-dot scoring+sort expression a
     //    second time per row (it showed up verbatim in DataFilters);
     //  - this side is the JOIN'S STREAM side (the assigned corpus side is
-    //    the broadcast build), so after the explode Spread.byKey lifts the
-    //    candidate dot-product stream — the dominant cost, avg-cell-size
-    //    rows per probe row — off the single-row-group local-parquet
-    //    split (structural no-op at scale). Spreading the narrow
-    //    post-explode rows (not the scan) keeps the planner's
-    //    build-side choice and scan stats intact.
+    //    the broadcast build), so the candidate dot-product stream — the
+    //    dominant cost, avg-cell-size rows per probe row — is spread after
+    //    the explode. Spreading the narrow post-explode rows (not the
+    //    scan) keeps the planner's build-side choice and scan stats intact.
     val probed0 = prep
       .withColumn("scores", cellScores(col("vec"), col("nrm")))
       .withColumn("cells",
@@ -558,7 +555,7 @@ object Similarity {
       .select(
         col("id").as("query_id"), col("vec").as("q_vec"), col("nrm").as("q_nrm"),
         coalesce(element_at(col("cells"), col("pr")), lit(-2)).as("cell"))
-    val probed = Spread.byKeyPinned(probed0, col("query_id"))
+    val probed = Spread.of(prep).byKey(probed0, col("query_id"))
     // every (query, neighbor) pair meets AT MOST ONCE: a neighbor is
     // assigned to exactly one cell (argmax) and a query's probe cells are
     // distinct indices — so the old groupBy(query, neighbor).max was a
@@ -566,10 +563,9 @@ object Similarity {
     // (every key unique); the top-k window consumes the join output
     // directly (guide §2.4). The probe side is the broadcast side
     // (nprobe rows per query), so the candidate dot-product stream rides
-    // the corpus-side scan's partitioning — Spread.byKey lifts the
-    // single-row-group local-parquet case onto all cores (structural
-    // no-op at scale), and Spark's WindowGroupLimit pre-filters each
-    // partition to its own top-k before the one ranking exchange.
+    // the spread probe side's partitioning, and Spark's WindowGroupLimit
+    // pre-filters each partition to its own top-k before the one ranking
+    // exchange.
     val scored = probed.join(
         assigned.select(col("cell"),
           col("id").as("neighbor_id"), col("vec").as("c_vec"), col("nrm").as("c_nrm")),
@@ -828,10 +824,8 @@ object Similarity {
       threshold: Double,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    // spread the stream side of the BNLJ with a PINNED partition count: an
-    // unpinned repartition of a ~2 MB embedding frame is coalesced back to
-    // one task by AQE, re-serializing the n²/2 dot pass
-    val a = Spread.byKeyPinned(
+    // spread the stream side of the BNLJ: the n²/2 dot pass
+    val a = Spread.of(corpus).byKey(
       prepared(corpus, idCol, vecCol, "id_a", "v_a", "n_a"), col("id_a"))
     val b = prepared(corpus, idCol, vecCol, "id_b", "v_b", "n_b")
     a.crossJoin(broadcast(b))
@@ -1029,7 +1023,7 @@ object Similarity {
     // same plan-shape discipline as ivfSearch's probe side: literal
     // generator input + element_at after the Generate (no duplicated
     // scoring expression in a pushed size-filter), and the post-explode
-    // stream spread off the single local scan split
+    // stream spread
     val probed0 = prep
       .withColumn("scores", cellScores(col("vec"), col("nrm")))
       .withColumn("cells",
@@ -1044,12 +1038,11 @@ object Similarity {
         col("id").as("query_id"), col("lbl").as("query_label"),
         col("vec").as("q_vec"), col("nrm").as("q_nrm"),
         coalesce(element_at(col("cells"), col("pr")), lit(-2)).as("cell"))
-    val probed = Spread.byKeyPinned(probed0, col("query_id"))
+    val probed = Spread.of(prep).byKey(probed0, col("query_id"))
     // same discipline as ivfSearch: (query, neighbor) pairs are unique by
     // construction (one assigned cell per neighbor, distinct probe cells),
     // so the old 4-key groupBy.max shuffled the full candidate mass to
-    // combine nothing; the probe side broadcasts, the corpus-side scan is
-    // spread so the dot-product stream is not pinned to one split, and
+    // combine nothing; the spread probe side streams the dot products, and
     // WindowGroupLimit partial-top-ks before the single ranking exchange
     val scored = probed.join(
         assigned.select(col("cell"),

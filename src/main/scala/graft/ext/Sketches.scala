@@ -180,10 +180,8 @@ object Sketches {
       seed: Int = 41,
       portable: Boolean = true): DataFrame = {
     // the md5 cell hashes (depth per distinct item, twice: sketch build +
-    // estimate probe) run in the stages that read the count aggregate —
-    // AQE coalesces that byte-light exchange to one task locally, so the
-    // hash passes are spread explicitly (no-op at scale)
-    val counts = Spread.byKeyPinned(
+    // estimate probe) run in the stages that read the count aggregate
+    val counts = Spread.of(items).byKey(
       items
         .groupBy(col(itemCol).cast("string").as("__item"))
         .agg(count(lit(1)).as("exact_cnt")),
@@ -395,14 +393,12 @@ object Sketches {
     require(cols.nonEmpty, "hllColumnAudit needs at least one column")
     val spark = df.sparkSession
     import spark.implicits._
-    // two explicit spreads, both structural no-ops at scale (leaf-split
-    // guard): the |cols|-way explode + partial-distinct pass is the
-    // heaviest stage and runs on the raw scan's few local splits, and the
-    // md5 register pass downstream reads the distinct exchange that AQE
-    // coalesces to one task locally
-    val vals = Spread.byKeyPinned(
-      Spread.byKeyPinned(
-        df.select(cols.map(col): _*), struct(cols.map(col): _*))
+    // two spreads: the |cols|-way explode + partial-distinct pass is the
+    // heaviest stage, and the md5 register pass downstream reads the
+    // distinct's exchange
+    val spread = Spread.of(df)
+    val vals = spread.byKey(
+      spread.byKey(df.select(cols.map(col): _*), struct(cols.map(col): _*))
         .select(explode(array(cols.map(c =>
           struct(lit(c).as("column_name"), col(c).cast("string").as("v"))): _*)).as("p"))
         .select(col("p.column_name").as("column_name"), col("p.v").as("v"))

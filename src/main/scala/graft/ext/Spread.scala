@@ -3,91 +3,63 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
 
-/** Input-parallelism guard for expensive per-row passes (guide §2.5,
-  * "input skew: one huge unsplittable file").
+/** The one local-parallelism policy for expensive per-row passes (guide
+  * §2.5, "input skew: one huge unsplittable file"): one probe per operator
+  * call, one width, two verbs.
   *
-  * A parquet file is splittable only at row-group boundaries, so a small
-  * table written as one row group arrives as ONE scan partition — and any
-  * costly map work stacked on the scan (shingling, minhash, per-asset codec
-  * walks, quality metrics) runs serially on one core while the rest idle.
-  * At 100 TB the same scan arrives as thousands of splits and needs no
-  * help.
-  *
-  * The guard probes the LEAF FILE SCANS of the frame's physical plan, not
+  * Probe ([[Spread.of]]). A parquet file splits only at row-group
+  * boundaries, so a small table written as one row group arrives as ONE
+  * scan partition, and costly map work stacked on it (shingling, minhash,
+  * md5 sketch passes, dot products, quality regexes) runs serially on one
+  * core. The operator's INPUT frame is local-tiny when it has file-scan
+  * leaves and their splits × 2 ≤ `defaultParallelism`. Leaf splits, not
   * `df.rdd.getNumPartitions`: the RDD conversion reports the static
-  * `spark.sql.shuffle.partitions` for any post-shuffle frame (pre-AQE), so
-  * it both misreads the parallelism it is meant to probe and pays an extra
-  * physical-plan compile. Leaf splits are the real signal — a query whose
-  * inputs arrive in a handful of splits is in local-tiny mode; at cluster
-  * scale every leaf has thousands of splits and the spread is a structural
-  * no-op. Frames with no file-scan leaves (literal/local relations) are
-  * never spread.
+  * shuffle-partition count for any post-shuffle frame and pays a second
+  * physical-plan compile. Frames with no file-scan leaves (literal/local
+  * relations) are never local-tiny. At cluster scale every leaf has
+  * thousands of splits, so both verbs return their frame unchanged there
+  * and AQE's byte-based sizing stands. Frames derived inside the operator
+  * (off a pin or an aggregate) follow the input's decision.
   *
-  * Hash-by-key (not round-robin) keeps the assignment deterministic under
-  * task retry (SPARK-38388 class of bugs) and skips round-robin's
-  * sort-before-repartition.
+  * Width ([[Spread#byKey]]). `min(8, defaultParallelism)` tasks, as an
+  * explicit-count exchange: the spread frames' shuffle BYTES are tiny, so
+  * a keyless-count repartition is folded back to one task by AQE's
+  * small-shuffle coalescing and re-serializes exactly the stage it exists
+  * to spread. The cap of 8: per-task CPU inflates with concurrent width on
+  * one box (the winnow gram pass measured 0.75 → 9.2 CPU-s from 4 to 32
+  * tasks, with no wall gain past 16). Hash by key, not round-robin: the
+  * assignment is deterministic under task retry (the SPARK-38388 class)
+  * and skips round-robin's sort-before-repartition. Keyed by the join or
+  * window key downstream, the exchange also satisfies that operator's
+  * clustering and replaces its own exchange.
+  *
+  * Pin ([[Spread#pin]]), for a frame reused several times within ONE
+  * operator call. Local-tiny: an eager localCheckpoint, which is cheap,
+  * truncates the plan, and has no executor-loss exposure on one machine.
+  * At scale: NO pin. A corpus-sized localCheckpoint is executor-local
+  * state with no recompute lineage (one lost executor fails the job), and
+  * a CacheManager persist cannot be scoped to the call (the entry outlives
+  * it and aliases identical plans across later queries and runs).
+  * Re-running the map-side subtree once per consumer is the
+  * fault-tolerant trade.
   */
+final class Spread private (tiny: Boolean, width: Int) {
+  def byKey(df: DataFrame, keys: Column*): DataFrame =
+    if (tiny) df.repartition(width, keys: _*) else df
+
+  def pin(df: DataFrame): DataFrame =
+    if (tiny) df.localCheckpoint() else df
+}
+
 object Spread {
-  private def fewLeafSplits(df: DataFrame): Boolean = {
-    val sc = df.sparkSession.sparkContext
-    val splits = df.queryExecution.sparkPlan.collectLeaves().collect {
+  private val MaxWidth = 8
+
+  def of(input: DataFrame): Spread = {
+    val parallelism = input.sparkSession.sparkContext.defaultParallelism
+    val splits = input.queryExecution.sparkPlan.collectLeaves().collect {
       case f: FileSourceScanExec => f.inputRDD.getNumPartitions
     }
-    splits.nonEmpty && splits.sum * 2 <= sc.defaultParallelism
+    new Spread(splits.nonEmpty && splits.sum * 2 <= parallelism,
+      math.min(MaxWidth, parallelism))
   }
-
-  def byKey(df: DataFrame, key: Column): DataFrame =
-    if (fewLeafSplits(df)) df.repartition(key) else df
-
-  /** The raw local-tiny probe, for call sites whose frame to spread has no
-    * file-scan leaves of its own (derived streams off a pinned frame): the
-    * operator probes its INPUT docs frame and pins derived exchanges only
-    * when that input arrived in a handful of splits. Same scale semantics
-    * as the guarded spreads — thousands of input splits → never fires.
-    */
-  def localTiny(df: DataFrame): Boolean = fewLeafSplits(df)
-
-  /** byKey with the partition count pinned to the session parallelism, for
-    * frames whose shuffle BYTES are tiny but whose downstream per-row work
-    * is not (md5 sketch passes, dot-product joins, codec walks): a
-    * keyless-count repartition there gets folded back to one task by AQE's
-    * small-shuffle coalescing, re-serializing exactly the stage the spread
-    * exists to parallelize. Still a structural no-op at scale (leaf-split
-    * guard above).
-    */
-  def byKeyPinned(df: DataFrame, key: Column): DataFrame =
-    if (fewLeafSplits(df))
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
-    else df
-
-  /** [[byKeyPinned]] with the local fan-out CAPPED below the session
-    * parallelism, for allocation-heavy explode passes (gram/shingle
-    * streams). Per-task CPU inflates with concurrent width on one box —
-    * measured 0.75 → 9.2 CPU-s moving the winnow gram pass from 4 to 32
-    * concurrent tasks (allocation-rate/memory-bandwidth contention, the
-    * same signature as the PQ-training A/B) while wall plateaus across
-    * 4–16 tasks and REGRESSES at full width — so the pin stops at `cap`
-    * tasks (never above the session parallelism). Still a structural
-    * no-op at scale: the leaf-split guard only fires in local-tiny mode.
-    */
-  def byKeyCapped(df: DataFrame, key: Column, cap: Int = 8): DataFrame =
-    if (fewLeafSplits(df))
-      df.repartition(
-        math.min(cap, df.sparkSession.sparkContext.defaultParallelism), key)
-    else df
-
-  /** Lineage pin for a frame reused several times within ONE operator call.
-    *
-    * Local-tiny mode (few leaf splits): an eager localCheckpoint — cheap,
-    * truncates the plan, and a single-machine bench has no executor-loss
-    * exposure. At scale: NO pin. A corpus-sized localCheckpoint is
-    * executor-local state with no recompute lineage (one lost executor
-    * fails the whole job), and a CacheManager persist cannot be scoped to
-    * the call — the entry outlives it and aliases identical plans across
-    * later queries and runs (cross-run result reuse a bench must never
-    * see). Re-running the (map-side / combine-friendly) subtree once per
-    * consumer is the fault-tolerant trade.
-    */
-  def pinLocal(df: DataFrame): DataFrame =
-    if (fewLeafSplits(df)) df.localCheckpoint() else df
 }

@@ -115,13 +115,7 @@ object TextAnalysis {
     val nChars = length(t)
     val alpha = length(regexp_replace(lower(t), "[^a-z]", ""))
     val stop = langScore(t, langMarkers.flatMap(_._2))
-    // regexp + marker counting are the most expensive per-row text exprs in
-    // the library; on a single-split scan they run serially (Spread is a
-    // no-op once the scan has real splits — guide §2.5). Keyed by a CHEAP
-    // prefix hash, not the text value: hashing megabyte documents adds a
-    // full extra pass over every byte, and duplicate texts — common in the
-    // dedup corpora this targets — would all land on one partition.
-    Spread.byKey(docs, xxhash64(substring(t, 1, 64), length(t)))
+    docs
       .withColumn("n_tokens", nTokens)
       .withColumn("n_chars_measured", nChars)
       // chars minus separating spaces, over tokens: integer-exact mean len

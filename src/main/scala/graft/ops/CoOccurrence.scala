@@ -101,7 +101,7 @@ object CoOccurrence {
     // sized is one row per kept basket, so the basket total is a plain
     // count and item supports explode the (deduplicated) arrays — the old
     // countDistinct and per-row scans are gone with the self-join
-    val sized = graft.ext.Spread.pinLocal(
+    val sized = graft.ext.Spread.of(df).pin(
       sizedItems(df, basketCol, itemCol, maxBasketSize))
     val itemCounts = sized.select(explode(col("items")).as("item"))
       .groupBy(col("item")).agg(count(lit(1)).as("n_item"))

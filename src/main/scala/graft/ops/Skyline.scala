@@ -29,7 +29,7 @@ object Skyline {
     // local pin the caller's (often expensive) metric pipeline runs twice,
     // and the verdict join's inferred isnotnull(x) pushes the metric
     // expression into the scan filter besides
-    val dd = graft.ext.Spread.pinLocal(df)
+    val dd = graft.ext.Spread.of(df).pin(df)
     val perX = dd.groupBy(col(xCol)).agg(max(col(yCol)).as("__bucket_max"))
     val wGreater = Window.orderBy(col(xCol).desc)
       .rowsBetween(Window.unboundedPreceding, -1)
